@@ -36,14 +36,20 @@ pre-AQE partitioning. The split count is instead ESTIMATED from the
 analyzed plan's file-source leaves (file bytes + open cost against
 ``maxPartitionBytes``/``minPartitionNum`` — the same quantities
 ``FilePartition.maxSplitBytes`` packs by). Analysis is work the action
-needs regardless; no optimizer rules or physical strategies run. The
-estimate is a lower bound on the real packing, so ``est >= floor``
-(skip, the at-scale branch) is always safe; near the boundary a
-conservative extra exchange of an already-parallel relation is the
-worst case. Plans whose leaves are not file scans (cached stages,
-local relations) fall back to the old RDD probe — no such call site
-exists today, and the fallback keeps the no-op guarantee if one
-appears.
+needs regardless; no optimizer rules or physical strategies run. For
+an unpruned scan of splittable files the estimate is a lower bound on
+the real packing, so ``est >= floor`` (skip, the at-scale branch) is
+safe there; near the boundary a conservative extra exchange of an
+already-parallel relation is the worst case. It is NOT a lower bound
+for a partition-pruned scan: the analyzed plan's file index still
+lists every partition's files (pruning happens after analysis, when
+the scan is planned), so the estimate prices files the scan never
+opens and can skip the exchange for a pruned scan that carries fewer
+splits than the floor. A single unsplittable row group bigger than a
+split overestimates the same way. Plans whose leaves are not file
+scans (cached stages, local relations) fall back to the old RDD probe
+— no such call site exists today, and the fallback keeps the no-op
+guarantee if one appears.
 """
 
 from __future__ import annotations
@@ -79,7 +85,9 @@ def file_leaf_stats(df: DataFrame) -> tuple[int, int] | None:
     not a file-source relation (cached stage, local relation, range);
     callers fall back. Also the per-micro-batch volume probe for the
     streaming drains: a file-source micro-batch is a LogicalRelation
-    over exactly that epoch's files."""
+    over exactly that epoch's files. The sizes are those of the file
+    index BEFORE partition pruning, so for a scan with partition
+    filters they overcount what the scan reads."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         total = 0
@@ -104,11 +112,12 @@ def estimated_scan_partitions(df: DataFrame) -> int | None:
     (file bytes + per-file open cost) divided by the same
     max-split-bytes formula Spark packs splits with
     (``FilePartition.maxSplitBytes``). Returns None when
-    :func:`file_leaf_stats` cannot price the leaves. A single giant
-    unsplittable row group makes the TRUE count lower than this
-    estimate, so callers may still fan out less than ideal in that
-    corner — acceptable: the estimate errs toward skipping the
-    exchange only when the scan is genuinely large."""
+    :func:`file_leaf_stats` cannot price the leaves. Two cases make the
+    TRUE count lower than this estimate: a single giant unsplittable
+    row group, and a partition-pruned scan (the leaf stats count the
+    pruned-away files too). Callers may then fan out less than ideal;
+    for unpruned scans the estimate errs toward skipping the exchange
+    only when the scan is genuinely large."""
     stats = file_leaf_stats(df)
     if stats is None:
         return None

@@ -8,8 +8,12 @@ sort-merge join, or a Python UDF sneaking into a JVM-only pipeline.
 from __future__ import annotations
 
 import re
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql import functions as F
 
 from genai_batch_processor_spark import queries
 
@@ -303,8 +307,6 @@ def test_partitioned_sink_prunes_at_read(spark, sf_dir, tmp_path):
     at the DIRECTORY level: the filter shows up as a PartitionFilter
     (zero data files from other langs opened), not a post-scan
     Filter."""
-    from pyspark.sql import functions as F
-
     from genai_batch_processor_spark.sources.tables import load_table
 
     out = str(tmp_path / "docs_by_lang")
@@ -359,8 +361,17 @@ def test_int8_topk_broadcasts_queries_and_avoids_corpus_shuffle(
 ):
     """Quantized retrieve must keep the brute-force shape: query side
     broadcast, corpus never hash-shuffled except for the two per-query
-    rank windows (shortlist + final)."""
-    plan = _plan(spark, "embedding_topk_int8", sf_dir)
+    rank windows (shortlist + final). Read from the operator plan, as
+    in test_embedding_topk_broadcasts_queries: q_embedding_topk_int8
+    serves the session-shared materialized leaf."""
+    from genai_batch_processor_spark.operators import similarity
+
+    emb = queries.load_table(spark, sf_dir, "embeddings")
+    qs = emb.filter(F.col("vec_id") < queries.ANN_N_QUERIES)
+    df = similarity.topk_int8(emb, qs)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert plan.count("Exchange hashpartitioning") <= 4
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
@@ -408,106 +419,192 @@ def test_span_probe_broadcasts_batch_not_index(spark, sf_dir):
     assert "SinglePartition" not in plan
 
 
-def _fresh_part_pairs(spark):
-    """Drop the session-shared persisted blocking stages (r8) so these
+def _fresh_part_pairs(sf_dir):
+    """Drop the session-shared stages built over sf_dir (r8) so these
     plan tests read the OPERATOR's plan, not an InMemoryRelation left
-    by whichever test consumed the stage first — the cache makes plan
+    by whichever test consumed the stage first — the store makes plan
     text run-order-dependent, exactly the caveat BENCH_PLANS documents
     for the other shared stages."""
-    from genai_batch_processor_spark import queries as Q
+    queries.invalidate_shared_stages(sf_dir=sf_dir)
 
-    Q.invalidate_part_pairs_cache()
+
+def _stage_keys(name):
+    return [k for k in queries._STAGES if k[0] == name]
+
+
+class _SlowFuture(queries.Future):
+    """Widens the check-then-insert window in _shared, so a store
+    without its lock lets several threads claim one key."""
+
+    def __init__(self):
+        time.sleep(0.05)
+        super().__init__()
+
+
+def _race(fn, n=8):
+    """Run ``fn`` in ``n`` threads released together; their results."""
+    start = threading.Barrier(n, timeout=30)
+
+    def call(_):
+        start.wait()
+        return fn()
+
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        return list(pool.map(call, range(n)))
+
+
+def test_shared_stage_single_flight(spark, monkeypatch):
+    """8 threads cold-build one key: build() runs once and every thread
+    gets the same object."""
+    monkeypatch.setattr(queries, "Future", _SlowFuture)
+    sf = "/shared-stage-test/single-flight"
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.3)  # keep the build in flight while the rest arrive
+        return object()
+
+    try:
+        got = _race(lambda: queries._shared(spark, "t_single", sf, build=build))
+        assert len(calls) == 1
+        assert all(g is got[0] for g in got)
+        assert len(_stage_keys("t_single")) == 1
+    finally:
+        queries.invalidate_shared_stages(sf_dir=sf)
+
+
+def test_shared_stage_build_error_reaches_waiters_and_is_not_cached(
+    spark, monkeypatch
+):
+    """A raising build() reaches every concurrent caller, runs once,
+    and leaves nothing cached: the next call rebuilds."""
+    monkeypatch.setattr(queries, "Future", _SlowFuture)
+    sf = "/shared-stage-test/error"
+    calls = []
+
+    def failing():
+        calls.append(1)
+        time.sleep(0.3)
+        raise RuntimeError("build failed")
+
+    def call():
+        try:
+            queries._shared(spark, "t_error", sf, build=failing)
+        except RuntimeError as exc:
+            return exc
+        return None
+
+    try:
+        errors = _race(call)
+        assert len(calls) == 1
+        assert isinstance(errors[0], RuntimeError)
+        assert all(e is errors[0] for e in errors)
+        assert _stage_keys("t_error") == []
+        assert queries._shared(spark, "t_error", sf, build=lambda: 42) == 42
+        assert len(_stage_keys("t_error")) == 1
+    finally:
+        queries.invalidate_shared_stages(sf_dir=sf)
+
+
+def test_shared_stage_distinct_keys_build_concurrently(spark):
+    """Two keys build at the same time: each build waits for the other
+    on a barrier, which breaks (timeout) if the store's lock is held
+    while build() runs."""
+    sf = "/shared-stage-test/distinct"
+    both = threading.Barrier(2, timeout=10)
+
+    def build():
+        both.wait()
+        return object()
+
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            a, b = pool.map(
+                lambda key: queries._shared(
+                    spark, "t_distinct", sf, key, build=build
+                ),
+                ("a", "b"),
+            )
+        assert a is not b
+        assert len(_stage_keys("t_distinct")) == 2
+    finally:
+        queries.invalidate_shared_stages(sf_dir=sf)
 
 
 def test_part_pairs_cache_invalidation_and_cap(spark, sf_dir):
-    """r8 advice: the session-shared blocking-stage cache needs an
-    official eviction hook (fixture regenerated mid-session → stale
-    persisted stage) and a size cap (many sf_dirs in one session →
-    unbounded persisted memory). invalidate_part_pairs_cache drops and
-    unpersists by sf_dir or wholesale; inserts past the cap evict the
+    """r8 advice: the session-shared blocking stages need an official
+    eviction hook (fixture regenerated mid-session → stale persisted
+    stage) and a size cap (many sf_dirs in one session → unbounded
+    persisted memory). invalidate_shared_stages drops and unpersists
+    by sf_dir or wholesale; inserts past the per-name cap evict the
     oldest entry, unpersisted."""
-    from genai_batch_processor_spark import queries as Q
+    queries.invalidate_shared_stages()
+    assert queries._STAGES == {}
 
-    Q.invalidate_part_pairs_cache()
-    assert Q._PART_PAIRS_CACHE == {}
-
-    df = Q._part_pairs_shared(spark, sf_dir, "single")
-    assert len(Q._PART_PAIRS_CACHE) == 1
+    df = queries._part_pairs_shared(spark, sf_dir, "single")
+    assert len(_stage_keys("part_pairs")) == 1
     assert df.storageLevel.useMemory  # persisted while cached
 
     # scoped invalidation: a different sf_dir string is untouched
-    assert Q.invalidate_part_pairs_cache(sf_dir="/no/such/dir") == 0
-    assert len(Q._PART_PAIRS_CACHE) == 1
-    assert Q.invalidate_part_pairs_cache(sf_dir=sf_dir) == 1
-    assert Q._PART_PAIRS_CACHE == {}
+    assert queries.invalidate_shared_stages(sf_dir="/no/such/dir") == 0
+    assert len(_stage_keys("part_pairs")) == 1
+    assert queries.invalidate_shared_stages(sf_dir=sf_dir) == 1
+    assert _stage_keys("part_pairs") == []
     assert not df.storageLevel.useMemory  # unpersisted on eviction
 
-    # cap: shrink the (shared) cap to 1 and insert a second entry —
+    # cap: shrink the (per-name) cap to 1 and insert a second entry —
     # the first must be evicted and unpersisted, never just dropped
-    old_cap = Q._STAGE_CACHE_MAX
+    old_cap = queries._STAGE_CACHE_MAX
     try:
-        Q._STAGE_CACHE_MAX = 1
-        first = Q._part_pairs_shared(spark, sf_dir, "single")
-        second = Q._part_pairs_shared(spark, sf_dir, "multi")
-        assert list(Q._PART_PAIRS_CACHE) == [
-            (spark.sparkContext.applicationId, sf_dir, "multi")
+        queries._STAGE_CACHE_MAX = 1
+        first = queries._part_pairs_shared(spark, sf_dir, "single")
+        second = queries._part_pairs_shared(spark, sf_dir, "multi")
+        assert _stage_keys("part_pairs") == [
+            ("part_pairs", spark.sparkContext.applicationId, sf_dir, "multi")
         ]
         assert not first.storageLevel.useMemory
         assert second.storageLevel.useMemory
+        # wholesale invalidation drops the one surviving entry
+        assert queries.invalidate_shared_stages() == 1
+        assert not second.storageLevel.useMemory
     finally:
-        Q._STAGE_CACHE_MAX = old_cap
-        Q.invalidate_part_pairs_cache()
+        queries._STAGE_CACHE_MAX = old_cap
+        queries.invalidate_shared_stages()
 
 
 def test_invalidate_shared_stages_covers_every_cache(spark, sf_dir):
     """r9 self-review: the staleness/eviction hook must cover ALL
     session-shared persisted stages, not just the blocking stages the
-    r8 advice named. Populate two different stage caches, invalidate
-    by sf_dir, and require both dropped and unpersisted — and the
-    registry must track every module-level *_CACHE dict so a new cache
-    cannot silently fall outside the hook."""
-    import re
-
-    import genai_batch_processor_spark.queries as Q
-
-    # registry completeness: every module-level *_CACHE dict is either
-    # registered or one of the two registries themselves
+    r8 advice named. Populate two different stages, invalidate by
+    sf_dir, and require both dropped and unpersisted — and no
+    module-level *_CACHE dict may exist beside the one shared-stage
+    store, so a new cache cannot silently fall outside the hook."""
     src_caches = {
         name
-        for name in vars(Q)
-        if re.fullmatch(r"_[A-Z_]*CACHE", name) and isinstance(vars(Q)[name], dict)
+        for name, obj in vars(queries).items()
+        if re.fullmatch(r"_[A-Z_]*CACHE", name) and isinstance(obj, dict)
     }
-    registered = set()
-    for reg in (Q._DF_STAGE_CACHES, Q._SCALAR_STAGE_CACHES):
-        for cache in reg.values():
-            for name in src_caches:
-                if vars(Q)[name] is cache:
-                    registered.add(name)
-    assert registered == src_caches, (
-        f"unregistered stage caches: {sorted(src_caches - registered)}"
+    assert src_caches == set(), (
+        f"stage caches outside the shared-stage store: {sorted(src_caches)}"
     )
 
-    Q.invalidate_shared_stages()
-    pairs = Q._near_dup_pairs_shared(spark, sf_dir)
-    sim = Q._simhash_pairs_shared(spark, sf_dir)
+    queries.invalidate_shared_stages()
+    pairs = queries._near_dup_pairs_shared(spark, sf_dir)
+    sim = queries._simhash_pairs_shared(spark, sf_dir)
     assert pairs.storageLevel.useMemory and sim.storageLevel.useMemory
-    assert Q.invalidate_shared_stages(sf_dir="/no/such/dir") == 0
-    dropped = Q.invalidate_shared_stages(sf_dir=sf_dir)
+    assert queries.invalidate_shared_stages(sf_dir="/no/such/dir") == 0
+    dropped = queries.invalidate_shared_stages(sf_dir=sf_dir)
     assert dropped >= 2
     assert not pairs.storageLevel.useMemory
     assert not sim.storageLevel.useMemory
-    assert all(
-        key[1] != sf_dir
-        for reg in (Q._DF_STAGE_CACHES, Q._SCALAR_STAGE_CACHES)
-        for cache in reg.values()
-        for key in cache
-    )
+    assert all(key[2] != sf_dir for key in queries._STAGES)
 
 
 def test_part_match_candidates_no_single_partition(spark, sf_dir):
     """The linkage self-join must stay block-local — no global funnel
     and no cartesian product anywhere in the plan."""
-    _fresh_part_pairs(spark)
+    _fresh_part_pairs(sf_dir)
     plan = _plan(spark, "part_match_candidates", sf_dir)
     assert "SinglePartition" not in plan
     assert "Cartesian" not in plan
@@ -519,7 +616,7 @@ def test_part_match_multikey_plan_shape(spark, sf_dir):
     above the distinct-name self-join, never above a row-expanded
     relation (one levenshtein call per pass in the plan, and no
     cartesian/global funnel)."""
-    _fresh_part_pairs(spark)
+    _fresh_part_pairs(sf_dir)
     plan = _plan(spark, "part_match_multikey", sf_dir)
     assert "SinglePartition" not in plan
     assert "Cartesian" not in plan
