@@ -63,33 +63,16 @@ def prompt_groups(
 
 
 def representatives(
-    df: DataFrame,
-    key_col: str,
-    id_col: str = "idx",
-    groups: DataFrame | None = None,
-    carry: tuple[str, ...] = (),
+    df: DataFrame, key_col: str, id_col: str = "idx"
 ) -> DataFrame:
     """The deduplicated submit set: original rows filtered to the group
     representatives. Implemented as a semi join on (key, id) — the
     groups side is the distinct relation, usually far smaller than the
-    input, and broadcast-eligible when the duplicate rate is high.
-    Pass a precomputed ``groups`` relation when the caller already built
-    one (avoids re-declaring the aggregation in the plan).
-
-    ``carry`` names group-level columns (e.g. ``n_rows``) to attach to
-    each representative row; that switches the semi join to an inner
-    join on the same (key, rep_id) condition — the identical row set,
-    one definition of "the deduplicated submit set" either way."""
-    if groups is None:
-        groups = prompt_groups(df, key_col, id_col)
-    keyed_groups = groups.select(
-        F.col(key_col),
-        F.col("rep_" + id_col).alias(id_col),
-        *[F.col(c) for c in carry],
+    input, and broadcast-eligible when the duplicate rate is high."""
+    groups = prompt_groups(df, key_col, id_col).select(
+        F.col(key_col), F.col("rep_" + id_col).alias(id_col)
     )
-    if not carry:
-        return df.join(keyed_groups, [key_col, id_col], "left_semi")
-    return df.join(keyed_groups, [key_col, id_col], "inner")
+    return df.join(groups, [key_col, id_col], "left_semi")
 
 
 def fan_out_responses(

@@ -15,7 +15,7 @@ one side is dimension-sized, pass ``broadcast_small=True``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import ids
@@ -26,7 +26,7 @@ def attach_results(
     responses: DataFrame,
     *,
     id_col: str = "idx",
-    custom_id_col: str = "custom_id",
+    custom_id_col: Column | str = "custom_id",
     how: str = "left",
     broadcast_small: bool = False,
 ) -> DataFrame:

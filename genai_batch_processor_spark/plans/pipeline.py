@@ -3,13 +3,14 @@ two-method contract ``run()`` + ``validate_request()``
 (``src/genai_batch_processor/base.py:4-15``) re-expressed as composed
 DataFrame stages.
 
-Lifecycle (reference entry point 1, SURVEY.md §3): validate (limit(1)
-probe) → build requests → sharded JSONL sink → submit/poll via the
-orchestrator boundary → explicit-schema result scan → error split →
-content/answer extraction → join-back → ordered results. Every stage
-except submit/poll is a distributed DataFrame job; nothing round-trips
-through driver memory (the reference materializes the whole input at
-``oai:277`` and the whole output at ``oai:229``).
+Lifecycle (reference entry point 1, SURVEY.md §3): build requests and
+prompt groups into ONE persisted planned relation → validate (limit(1)
+probe of its cached input columns) → sharded JSONL sink of the
+representatives → submit/poll via the orchestrator boundary → result
+scan → error split → join-back on the representative ordinal. Every
+stage except submit/poll is a distributed DataFrame job; nothing
+round-trips through driver memory (the reference materializes the whole
+input at ``oai:277`` and the whole output at ``oai:229``).
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ import shutil
 import tempfile
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,15 +54,19 @@ class BatchPipeline:
             self._owned_paths.append(work_dir)
         self.work_dir = work_dir
         # Run telemetry (filled by run()): submit-side counts come from
-        # a Spark Observation riding the sink job — measured during the
+        # Spark Observations riding the sink job — measured during the
         # write action, no extra count() job; job metadata comes from
         # the orchestrator manifest.
         self.last_metrics: dict = {}
+        # The planned relation the last run() persisted.
+        self._planned: DataFrame | None = None
 
     def cleanup(self) -> list[str]:
-        """Remove every temp path this pipeline created (vtx:327-354
-        semantics, as an explicit ledger instead of attribute scraping).
-        Returns the removed paths; idempotent."""
+        """Release the relation the last run() persisted, then remove
+        every temp path this pipeline created (vtx:327-354 semantics, as
+        an explicit ledger instead of attribute scraping). Returns the
+        removed paths; idempotent."""
+        self._release()
         removed = []
         for p in self._owned_paths:
             if os.path.exists(p):
@@ -68,6 +74,11 @@ class BatchPipeline:
             removed.append(p)
         self._owned_paths.clear()
         return removed
+
+    def _release(self) -> None:
+        if self._planned is not None:
+            self._planned.unpersist()
+            self._planned = None
 
     # -- reference contract ---------------------------------------------------
 
@@ -118,24 +129,28 @@ class BatchPipeline:
     # -------------------------------------------------------------------------
 
     def _assemble(
-        self, with_req: DataFrame, resp: DataFrame
+        self, planned: DataFrame, resp: DataFrame, rekey: bool
     ) -> tuple[DataFrame, DataFrame]:
         """Shared lifecycle tail: error split → join-back. One code path
         for empty and non-empty runs, so their schemas cannot diverge.
-        The response-side join key is dropped after the join — the result
-        carries ONE custom_id column (the input side's)."""
+        Results and errors each join the planned relation to the
+        response side (one row per submitted request; only there is its
+        custom_id parsed) on the representative ordinal, re-keying each
+        row's response to the row's own custom_id when ``rekey``."""
+        planned = planned.withColumn("custom_id", F.col("request.custom_id"))
+        own = [c for c in planned.columns if c != "rep_idx"]
+        cid, row_resp = F.col("custom_id"), F.col("resp")
+        if rekey:
+            row_resp = self._rewrite_resp_custom_id(row_resp, cid)
+
+        def join_back(side: DataFrame, *cols: str) -> DataFrame:
+            return joinback.attach_results(
+                planned, side, id_col="rep_idx",
+                custom_id_col=self._resp_custom_id(), how="inner",
+            ).select(*cols, row_resp.alias("resp"))
+
         err = self._resp_error()
-        results, errors = resp.filter(~err), resp.filter(err)
-        joined = joinback.attach_results(
-            with_req.withColumn("custom_id", F.col("request.custom_id")),
-            results.select(
-                "resp", self._resp_custom_id().alias("__resp_custom_id")
-            ),
-            id_col="idx",
-            custom_id_col="__resp_custom_id",
-            how="inner",
-        ).drop("__resp_custom_id")
-        return joined, errors
+        return join_back(resp.filter(~err), *own), join_back(resp.filter(err))
 
     def run(
         self,
@@ -149,6 +164,15 @@ class BatchPipeline:
         **build_kwargs,
     ) -> tuple[DataFrame, DataFrame]:
         """Full lifecycle → (results, errors) DataFrames (oai:262-303).
+
+        The input side (``df``'s plan, ``build_requests``, the prompt
+        grouping) runs ONCE per call, as one planned relation — input
+        columns, ``request``, ``rep_idx`` (the ordinal whose request is
+        submitted for the row) — persisted MEMORY_AND_DISK and read by
+        the emptiness check, validation, the sink and both join-backs.
+        :meth:`cleanup` or the next ``run()`` releases it; the returned
+        relations stay valid after that (lineage recomputes the input
+        side) while ``work_dir``'s response files exist.
 
         Empty-input short-circuit (#15, oai:277-280) returns EMPTY
         relations with the same schemas as a non-empty run — downstream
@@ -168,69 +192,64 @@ class BatchPipeline:
         the prompt once.
         """
         self.last_metrics = {}
+        self._release()
         if dedupe_prompts and input_path is not None:
             raise ValueError(
                 "dedupe_prompts needs the build stage; it cannot apply "
                 "to a pre-built input_path (the shards on disk already "
                 "fixed the submit set)"
             )
-        if df.isEmpty():
-            with_req = self.build_requests(df, **build_kwargs)
-            return self._assemble(with_req, self._empty_responses())
-
-        fan_mapping: DataFrame | None = None
         if input_path is None:
-            if validate and not self.validate_request(df, **build_kwargs):
-                raise ValueError("validate_request failed on sample item")
-            with_req = self.build_requests(df, **build_kwargs)
-            submit_set = with_req
-            n_obs: Observation | None = None
+            planned = self.build_requests(df, **build_kwargs)
             if dedupe_prompts:
-                keyed = with_req.withColumn("__pkey", self._dedup_key())
+                keyed = planned.withColumn("__pkey", self._dedup_key())
                 groups = batching.prompt_groups(keyed, "__pkey", "idx")
-                # Representatives carry each group's multiplicity so
-                # n_input_rows is observed during the write action — no
-                # separate agg job re-running build_requests + the
-                # groupBy (round-3 ADVICE: the class promises
-                # write-time telemetry).
-                n_obs = Observation(f"dedupe-{uuid.uuid4().hex[:6]}")
-                submit_set = batching.representatives(
-                    keyed, "__pkey", "idx",
-                    groups=groups, carry=("n_rows",),
-                ).observe(
-                    n_obs,
-                    F.sum("n_rows").cast("long").alias("n_input_rows"),
-                ).drop("__pkey", "n_rows")
-                fan_mapping = keyed.select("idx", "__pkey").join(
+                planned = keyed.join(
                     groups.select("__pkey", "rep_idx"), "__pkey"
-                ).select("idx", "rep_idx")
-            input_path = os.path.join(self.work_dir, "input")
+                ).drop("__pkey")
+            else:
+                planned = planned.withColumn("rep_idx", F.col("idx"))
+        else:
+            # Passthrough: reconstruct the (input row, request) relation
+            # from the shards on disk. Join on the custom_id ordinal —
+            # the same key the response join-back uses.
+            rows, _bad = jsonl.read_request_jsonl(self.spark, input_path)
+            req = rows.select(
+                F.struct(*rows.columns).alias("request"),
+                ids.extract_index(F.col("custom_id")).alias("rep_idx"),
+            )
+            planned = df.join(req, df["idx"] == req["rep_idx"], "inner")
+        # Spark keys its cache by plan: drop what an earlier, uncleaned run
+        # of this same plan left, so this run reads its input afresh.
+        planned.unpersist()
+        planned = self._planned = planned.persist(StorageLevel.MEMORY_AND_DISK)
+        if planned.isEmpty():
+            empty = self._empty_responses()
+            return self._assemble(planned, empty, dedupe_prompts)
+
+        if input_path is None:
+            cached = planned.select(*df.columns)
+            if validate and not self.validate_request(cached, **build_kwargs):
+                raise ValueError("validate_request failed on sample item")
+            # Input rows are counted BEFORE the representative filter,
+            # in the same write action as the submit counts.
+            n_obs = Observation(f"input-{uuid.uuid4().hex[:6]}")
             obs = Observation(f"submit-{uuid.uuid4().hex[:6]}")
-            to_write = submit_set.select("request.*").observe(
+            to_write = planned.observe(
+                n_obs, F.count(F.lit(1)).alias("n_input_rows")
+            ).filter(F.col("idx") == F.col("rep_idx")).select(
+                "request.*"
+            ).observe(
                 obs,
                 F.count(F.lit(1)).alias("n_submitted"),
                 F.sum(F.octet_length(F.to_json(F.struct("*"))))
                 .cast("long")
                 .alias("submit_bytes"),
             )
+            input_path = os.path.join(self.work_dir, "input")
             jsonl.write_jsonl(to_write, input_path)
-            self.last_metrics = dict(obs.get)
-            self.last_metrics["n_input_rows"] = (
-                n_obs.get["n_input_rows"] if n_obs is not None else None
-            )
-        else:
-            # Passthrough: reconstruct the (input row, request) relation
-            # from the shards on disk. Join on the custom_id ordinal —
-            # the same key the response join-back uses.
-            req_rows, _bad = jsonl.read_request_jsonl(self.spark, input_path)
-            req = req_rows.select(
-                F.struct(*req_rows.columns).alias("request")
-            ).withColumn(
-                "__req_idx", ids.extract_index(F.col("request.custom_id"))
-            )
-            with_req = df.join(
-                req, df["idx"] == F.col("__req_idx"), "inner"
-            ).drop("__req_idx")
+            n_input = n_obs.get["n_input_rows"] if dedupe_prompts else None
+            self.last_metrics = dict(obs.get, n_input_rows=n_input)
 
         output_path = os.path.join(self.work_dir, "output")
         job = orchestrator.run_job(
@@ -247,28 +266,8 @@ class BatchPipeline:
         )
         self.last_metrics["job_id"] = job.job_id
         self.last_metrics["n_batches"] = len(job.batch_ids)
-
         resp = self._read_responses(output_path)
-        if fan_mapping is not None:
-            resp = self._fan_out(resp, fan_mapping)
-        return self._assemble(with_req, resp)
-
-    def _fan_out(self, resp: DataFrame, mapping: DataFrame) -> DataFrame:
-        """Expand representative responses to every original row: join
-        on the representative ordinal (the response side has one row per
-        DISTINCT body — the small, broadcast-eligible side), then re-key
-        each response struct to the row's own custom_id so the standard
-        join-back sees a 1:1 relation."""
-        rep_idx = ids.extract_index(self._resp_custom_id())
-        keyed = resp.withColumn("__rep_idx", rep_idx)
-        expanded = mapping.join(
-            keyed, mapping["rep_idx"] == keyed["__rep_idx"]
-        )
-        return expanded.select(
-            self._rewrite_resp_custom_id(
-                F.col("resp"), ids.custom_id("idx")
-            ).alias("resp")
-        )
+        return self._assemble(planned, resp, dedupe_prompts)
 
 
 class OpenAIBatchPipeline(BatchPipeline):

@@ -14,6 +14,9 @@ Design points:
   chop the corpus into micro-batches, every document submits under the
   same custom_id it would get in a single batch run (assertable: the
   streamed result set equals the one-shot result set exactly).
+- **Per-epoch release.** Once an epoch's results and errors are
+  written, ``pipe.cleanup()`` unpersists the relation its ``run()``
+  cached, so cached blocks do not accumulate over a long drain.
 - **Fresh work_dir per micro-batch.** Spark caches file listings per
   path in a session; re-reading an overwritten ``output`` dir can serve
   stale listings. Each epoch gets ``{base}/epoch={id}`` for its JSONL
@@ -67,6 +70,7 @@ def run_stream_inference(
         errors.select(F.to_json("resp").alias("resp_json")).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, "errors", f"batch={epoch_id}"))
+        pipe.cleanup()
 
     q = (
         doc_stream.writeStream.foreachBatch(process)

@@ -46,6 +46,36 @@ def test_fan_out_skips_when_floor_met(spark, sf_dir):
     assert out is docs  # same object: no repartition applied
 
 
+def test_leaf_stats_count_files_before_partition_pruning(spark, tmp_path):
+    """The documented caveat: on a partition-pruned scan the leaf stats
+    still count every file of the index, so the estimate can only err
+    high — never below the pruned scan's real partition count."""
+    path = str(tmp_path / "parted")
+    spark.range(400).withColumn("part", F.col("id") % 4).repartition(
+        3
+    ).write.partitionBy("part").parquet(path)
+    on_disk = [
+        f
+        for _root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    in_part = [
+        f
+        for f in os.listdir(os.path.join(path, "part=1"))
+        if f.endswith(".parquet")
+    ]
+    assert len(in_part) < len(on_disk)
+    pruned = spark.read.parquet(path).filter(F.col("part") == 1)
+    stats = fanout.file_leaf_stats(pruned)
+    assert stats is not None and stats[1] == len(on_disk)
+    est = fanout.estimated_scan_partitions(pruned)
+    n_scan = pruned.rdd.getNumPartitions()
+    assert n_scan <= len(in_part)  # the real scan did prune
+    assert est is not None and est >= n_scan
+    assert pruned.count() == 100
+
+
 def test_min_tasks_env_override_validated(spark, sf_dir, monkeypatch):
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     monkeypatch.setenv("SPARK_GRAFT_MIN_TASKS", "7")

@@ -125,15 +125,24 @@ def test_empty_input_schemas_match_nonempty_run(spark, sf_dir, tmp_path):
     break only on the empty path."""
     docs = load_table(spark, sf_dir, "documents").limit(5)
     docs = ids.assign_ids(docs, "doc_id")
-    full = OpenAIBatchPipeline(spark, work_dir=str(tmp_path / "full"))
-    res_full, err_full = full.run(docs, poll_interval_seconds=0.01)
-    empty_pipe = OpenAIBatchPipeline(spark, work_dir=str(tmp_path / "empty"))
-    res_empty, err_empty = empty_pipe.run(docs.limit(0))
-    # unionByName raises on schema mismatch — this IS the assertion
-    assert res_full.unionByName(res_empty).count() == res_full.count()
-    assert err_full.unionByName(err_empty).count() == err_full.count()
-    assert res_empty.schema == res_full.schema
-    assert err_empty.schema == err_full.schema
+    for dedupe in (False, True):  # a deduped run re-keys its responses
+        full = OpenAIBatchPipeline(
+            spark, work_dir=str(tmp_path / f"full{dedupe}")
+        )
+        res_full, err_full = full.run(
+            docs, dedupe_prompts=dedupe, poll_interval_seconds=0.01
+        )
+        empty_pipe = OpenAIBatchPipeline(
+            spark, work_dir=str(tmp_path / f"empty{dedupe}")
+        )
+        res_empty, err_empty = empty_pipe.run(
+            docs.limit(0), dedupe_prompts=dedupe
+        )
+        # unionByName raises on schema mismatch — this IS the assertion
+        assert res_full.unionByName(res_empty).count() == res_full.count()
+        assert err_full.unionByName(err_empty).count() == err_full.count()
+        assert res_empty.schema == res_full.schema
+        assert err_empty.schema == err_full.schema
 
 
 def test_input_passthrough_matches_built_run(spark, sf_dir, tmp_path):
@@ -661,6 +670,14 @@ def test_pipeline_dedupe_prompts_submits_distinct_only(
         ).collect()
     ]
     assert len(set(cids)) == len(cids)
+    # ... and so are error custom_ids: the two relations split the input
+    err_cids = [r[0] for r in errors.select("resp.custom_id").collect()]
+    assert len(set(err_cids)) == len(err_cids)
+    assert not set(cids) & set(err_cids)
+    all_cids = {
+        r[0] for r in docs.select(ids.custom_id("idx")).collect()
+    }
+    assert set(cids) | set(err_cids) == all_cids
     # duplicate rows share their representative's answer
     answers = results.select(
         F.col("custom_id"),
@@ -694,6 +711,35 @@ def test_vertex_pipeline_dedupe_prompts(spark, sf_dir, tmp_path):
         for _line in open(os.path.join(root, f))
     )
     assert submitted == 25
+    echoed = F.get_json_object(F.col("resp.request"), "$.custom_id")
+    res = results.select(
+        "custom_id",
+        echoed.alias("echoed"),
+        responses.extract_vertex_text(F.col("resp")).alias("answer"),
+    ).collect()
+    err_cids = [r[0] for r in errors.select(echoed).collect()]
+    # each row's echoed request carries its OWN custom_id, in both
+    # relations, and the two relations split the input exactly
+    assert all(r["echoed"] == r["custom_id"] for r in res)
+    res_cids = [r["custom_id"] for r in res]
+    assert len(set(res_cids)) == len(res_cids) == len(res)
+    assert len(set(err_cids)) == len(err_cids)
+    assert not set(res_cids) & set(err_cids)
+    text_of = {
+        r["cid"]: r["text"]
+        for r in docs.select(
+            ids.custom_id("idx").alias("cid"), "text"
+        ).collect()
+    }
+    assert set(res_cids) | set(err_cids) == set(text_of)
+    # duplicate rows share their representative's answer AND error fate
+    outcomes: dict[str, set] = {}
+    for r in res:
+        outcomes.setdefault(text_of[r["custom_id"]], set()).add(r["answer"])
+    for cid in err_cids:
+        outcomes.setdefault(text_of[cid], set()).add("<error>")
+    assert len(outcomes) == 25
+    assert all(len(o) == 1 for o in outcomes.values())
 
 
 def test_pipeline_run_exposes_submit_metrics(spark, sf_dir, tmp_path):
@@ -712,6 +758,97 @@ def test_pipeline_run_exposes_submit_metrics(spark, sf_dir, tmp_path):
     pipe2.run(docs, poll_interval_seconds=0.01)
     assert pipe2.last_metrics["n_submitted"] == 60
     assert pipe2.last_metrics["n_input_rows"] is None
+
+
+def _plan_operators(plan) -> list[str]:
+    """Operator names of a physical plan, looking through the adaptive
+    and query-stage wrappers but not into a cached relation's own plan
+    (an InMemoryTableScan is a leaf here)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [name] + _plan_operators(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return [name] + _plan_operators(plan.plan())
+    kids = plan.children()
+    return [name] + [
+        op for i in range(kids.size()) for op in _plan_operators(kids.apply(i))
+    ]
+
+
+def test_dedupe_run_job_budget_and_input_side_runs_once(
+    spark, sf_dir, tmp_path
+):
+    """One Vertex run(dedupe_prompts=True), the results write and the
+    error count stay under a Spark job ceiling: the input side (the
+    assign_ids window, build_requests, the prompt grouping) is planned
+    once, persisted, and never re-run by the join-backs. A lazy plan
+    ran 24 jobs here (10 + 8 + 6); the persisted plan runs 14."""
+    docs = _dup_docs(spark, sf_dir, n=25, copies=2)
+    sc = spark.sparkContext
+    group = "lifecycle-job-budget"
+    sc.setJobGroup(group, "dedupe run job budget")
+    try:
+        pipe = VertexAIBatchPipeline(spark, work_dir=str(tmp_path))
+        results, errors = pipe.run(
+            docs, dedupe_prompts=True, poll_interval_seconds=0.01
+        )
+        n_run = len(sc.statusTracker().getJobIdsForGroup(group))
+        results.select("idx", "resp").write.parquet(str(tmp_path / "ans"))
+        n_errors = errors.count()
+        n_all = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n_errors > 0
+    assert n_all - n_run <= 4   # the join-backs: 8 + 6 with a lazy plan
+    assert n_all <= 16
+    for rel in (results, errors):
+        ops = _plan_operators(rel._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScan" in ops
+        assert "Window" not in ops
+    pipe.cleanup()
+
+
+def test_cleanup_releases_the_persisted_plan(spark, sf_dir, tmp_path):
+    """run() persists one planned relation. A second run() on the same
+    pipeline releases the first run's; a run of the same plan on
+    another pipeline builds its own instead of reading what an
+    uncleaned run left cached; cleanup() releases the last one, also
+    when work_dir is the caller's. The returned relations stay valid
+    after the release: a persisted relation recomputes from its
+    lineage (the block-drop property a localCheckpoint lacks)."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    def new_rdds():
+        return set(jsc.getPersistentRDDs().keySet()) - before
+
+    def rows(df):
+        j = F.to_json(F.struct(*df.columns))
+        return sorted(r[0] for r in df.select(j).collect())
+
+    kw = dict(dedupe_prompts=True, poll_interval_seconds=0.01)
+    pipe = VertexAIBatchPipeline(spark, work_dir=str(tmp_path / "a"))
+    pipe.run(_dup_docs(spark, sf_dir, n=15, copies=2), **kw)
+    first = new_rdds()
+    assert len(first) == 1
+    docs = _dup_docs(spark, sf_dir, n=10, copies=2)
+    pipe.work_dir = str(tmp_path / "b")
+    pipe.run(docs, **kw)
+    second = new_rdds()
+    assert len(second) == 1 and second != first
+    other = VertexAIBatchPipeline(spark, work_dir=str(tmp_path / "c"))
+    results, errors = other.run(docs, **kw)
+    third = new_rdds()
+    assert len(third) == 1 and third != second
+
+    res_rows, err_rows = rows(results), rows(errors)
+    assert len(res_rows) + len(err_rows) == 20
+    assert other.cleanup() == []  # caller-owned work_dir: nothing removed
+    assert not new_rdds()
+    assert rows(results) == res_rows
+    assert rows(errors) == err_rows
+    pipe.cleanup()
 
 
 def test_takedown_reaches_persisted_dedup_index(spark, sf_dir, tmp_path):
