@@ -16,22 +16,27 @@ with parallelism = number of buckets. Value-derived buckets (not
 ``repartitionByRange``) on purpose: range-exchange boundaries come from
 per-execution sampling, and the offsets job and the final job could see
 DIFFERENT boundaries — value bucketing is a pure function of the data,
-so both jobs agree. Cost: 2 tiny agg jobs (min/max, per-bucket counts)
-before the one real shuffle; skewed key distributions skew buckets
-(raise ``buckets`` or pre-map the key if so). String keys bucket by a
-numeric PROXY — the first 7 UTF-8 bytes zero-padded and read as an
-integer — which is monotone non-decreasing w.r.t. Spark's string
-ordering (UTF8String compares raw bytes; zero-padding is the infimum
-of all extensions; the double rounding above 2^53 is itself monotone),
-so per-bucket ranking by the REAL key still composes into the exact
-global ordinal. Only exotic key types (binary, struct, …) fall back to
-the single-window path (fine for dimension-sized inputs).
+so both jobs agree. Cost: 1 tiny agg job (per-bucket counts) before the
+one real shuffle; skewed key distributions skew buckets (pre-map the
+key if so). String keys bucket by a numeric PROXY — the first 7 UTF-8
+bytes zero-padded and read as an integer — which is monotone
+non-decreasing w.r.t. Spark's string ordering (UTF8String compares raw
+bytes; zero-padding is the infimum of all extensions; the double
+rounding above 2^53 is itself monotone), so per-bucket ranking by the
+REAL key still composes into the exact global ordinal. Only exotic key
+types (binary, struct, …) fall back to the single-window path (fine
+for dimension-sized inputs).
 
-``custom_id_from_key`` is the zero-shuffle path when a natural key
-already exists (every fixture table has one).
+:func:`_bucket_offsets` is the one bucket-offset primitive: the shard
+planner's prefix sums (``operators/batching.py``) compose the same way.
+
+``custom_id`` is the zero-shuffle path when a natural key already
+exists (every fixture table has one).
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -119,87 +124,83 @@ def _scale_free_bucket(knum: Column) -> Column:
     )
 
 
+def _bucket_offsets(
+    bucketed: DataFrame, bucket_col: str, aggs: list[Column]
+) -> list[Column]:
+    """Each row's exclusive running total of every per-bucket aggregate
+    in ``aggs``, over ascending ``bucket_col`` (a long) — the offset a
+    per-bucket window composes with into a global running value.
+
+    One collect of the per-bucket aggregates (one row per bucket); each
+    total ships as ONE dense array over the observed bucket range, a
+    ``from_json`` literal that Catalyst constant-folds, read with an
+    O(1) clamped ``element_at`` (measured: an ``F.array`` of
+    per-element literals was rebuilt per row, ~0.25 s/action at sf0.1;
+    a map literal is probed per row). Unobserved buckets inherit the
+    previous offset: a row can only land there if the input changed
+    between the collect and the action (static by contract), and then
+    it degrades to the nearest boundary."""
+    rows = sorted(
+        tuple(r) for r in bucketed.groupBy(bucket_col).agg(*aggs).collect()
+    )
+    lo_b, hi_b = (rows[0][0], rows[-1][0]) if rows else (0, 0)
+    slot = (
+        F.greatest(F.least(F.col(bucket_col), F.lit(hi_b)), F.lit(lo_b))
+        - F.lit(lo_b)
+        + 1
+    ).cast("int")
+    offsets = []
+    for i in range(1, len(aggs) + 1):
+        starts: dict[int, int] = {}
+        acc = 0
+        for r in rows:
+            starts[r[0]] = acc
+            acc += r[i] or 0
+        dense: list[int] = []
+        last = 0
+        for b in range(lo_b, hi_b + 1):
+            last = starts.get(b, last)
+            dense.append(last)
+        arr = F.from_json(F.lit(json.dumps(dense)), "array<bigint>")
+        offsets.append(F.element_at(arr, slot))
+    return offsets
+
+
 def assign_ids(
     df: DataFrame,
     order_by: str,
     id_col: str = "idx",
-    buckets: int | None = None,
 ) -> DataFrame:
     """0-based dense ordinal by ``order_by`` (reference ``enumerate``
     semantics, oai:138), computed with bucket-parallel ranking.
 
-    ONE pre-job instead of two (r13 verdict item 5): the bucket id is
-    a DATA-INDEPENDENT monotone function of the key
-    (:func:`_scale_free_bucket`), so the min/max statistics job — and
-    its full input scan — are gone entirely; the single remaining job
-    collects the bounded per-fine-bucket counts (<= ~136k tiny rows by
-    construction, in practice tens-to-hundreds). The window then
-    partitions by the fine bucket DIRECTLY (more parallelism than the
-    old 64 equal-width buckets, and count-skew-free: a bucket spans
-    1/32 of a binary exponent, so no hot key range can overload one
-    the way equal-WIDTH buckets could), and each row's global offset
-    is an O(1) ``element_at`` into a DENSE offset array spanning the
-    observed bucket range — shipped as one constant-folded ``from_json``
-    literal, NOT an ``F.array`` of per-element literals (measured: the
-    unfolded CreateArray re-materialized the array per row, and a
-    higher-order filter re-evaluated the bucket expression per
-    element; both cost ~0.25 s/action at sf0.1 — the folded literal
-    matches the old design's wall time exactly while staying O(1) per
-    row at any scale). 2 input passes total instead of 3.
-    ``buckets <= 1`` forces the single-window fallback (tests use it
-    as the semantics reference); the value is otherwise ignored — the
-    bucket function is scale-free."""
-    import json
-
+    ONE pre-job: the bucket id is a DATA-INDEPENDENT monotone function
+    of the key (:func:`_scale_free_bucket`), so no min/max statistics
+    job is needed; the one job collects the bounded per-fine-bucket
+    counts (<= ~136k tiny rows by construction, in practice
+    tens-to-hundreds) for :func:`_bucket_offsets`. The window then
+    partitions by the fine bucket DIRECTLY. A bucket spans 1/32 of a
+    binary exponent, so parallelism is bounded by the key distribution,
+    not the cluster: on dense integer keys the largest bucket (a slice
+    of the top exponent) holds between 1/64 and 1/33 of the rows, so
+    the window stage has at most ~33-64 useful tasks whatever the
+    cluster size, and a hot key range still lands in one bucket.
+    2 input passes in all. Keys without a numeric proxy use one
+    unpartitioned window."""
     key = F.col(order_by)
-    dtype = df.schema[order_by].dataType
-
-    knum = _order_proxy(order_by, dtype)
-    if knum is None or (buckets is not None and buckets <= 1):
+    knum = _order_proxy(order_by, df.schema[order_by].dataType)
+    if knum is None:
         w = Window.orderBy(key)
         return df.withColumn(id_col, F.row_number().over(w) - F.lit(1))
 
-    fine = _scale_free_bucket(knum)
-    bucketed = df.withColumn("__fine", fine)
-    counts = sorted(
-        (r["__fine"], r["cnt"])
-        for r in bucketed.groupBy("__fine")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
+    bucketed = df.withColumn("__fine", _scale_free_bucket(knum))
+    (offset,) = _bucket_offsets(
+        bucketed, "__fine", [F.count(F.lit(1)).alias("cnt")]
     )
-    if not counts:
-        w = Window.orderBy(key)
-        return df.withColumn(id_col, F.row_number().over(w) - F.lit(1))
-    lo_b, hi_b = counts[0][0], counts[-1][0]
-    # dense exclusive-prefix-sum array over [lo_b, hi_b]; unobserved
-    # buckets inherit the previous offset (a row can only land there
-    # if the input changed between the counts job and the action —
-    # static by contract — and then it degrades to the nearest
-    # boundary, mirroring the old design's F.least clamp)
-    offs: dict[int, int] = {}
-    acc = 0
-    for b, c in counts:
-        offs[b] = acc
-        acc += c
-    dense: list[int] = []
-    last = 0
-    for b in range(lo_b, hi_b + 1):
-        if b in offs:
-            last = offs[b]
-        dense.append(last)
-    off_arr = F.from_json(F.lit(json.dumps(dense)), "array<bigint>")
-    slot = (
-        F.greatest(F.least(F.col("__fine"), F.lit(hi_b)), F.lit(lo_b))
-        - F.lit(lo_b)
-        + 1
-    ).cast("int")
     w = Window.partitionBy("__fine").orderBy(key)
     return (
         bucketed.withColumn(
-            id_col,
-            (
-                F.row_number().over(w) - 1 + F.element_at(off_arr, slot)
-            ).cast("long"),
+            id_col, (F.row_number().over(w) - 1 + offset).cast("long")
         )
         .drop("__fine")
     )
@@ -208,12 +209,6 @@ def assign_ids(
 def custom_id(idx: Column | str, prefix: str = "request") -> Column:
     """Stable join-back key ``request-{i}`` (run_text_classifier.py:50)."""
     c = F.col(idx) if isinstance(idx, str) else idx
-    return F.format_string(f"{prefix}-%d", c.cast("long"))
-
-
-def custom_id_from_key(key: Column | str, prefix: str = "request") -> Column:
-    """Shuffle-free key synthesis from a natural key — the 100 TB path."""
-    c = F.col(key) if isinstance(key, str) else key
     return F.format_string(f"{prefix}-%d", c.cast("long"))
 
 
@@ -226,7 +221,7 @@ def retry_custom_id(
     duplicate ids within a batch, and a fresh id keeps each attempt's
     response row distinct in the result relation. ``extract_index``
     still parses the ordinal (the suffix rides after it)."""
-    base = custom_id_from_key(key, prefix)
+    base = custom_id(key, prefix)
     if attempt <= 1:
         return base
     return F.format_string("%s-r%d", base, F.lit(attempt))

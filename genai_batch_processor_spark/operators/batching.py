@@ -9,19 +9,21 @@ things become first-class relational problems:
 1. **Duplicate prompts waste paid tokens.** Batch APIs bill per request;
    a corpus with a 20% duplicate rate pays 20% extra for identical
    answers. ``prompt_groups`` collapses the submit set to one
-   representative per distinct prompt key and ``fan_out_responses``
-   restores per-row results afterwards — an exact-dedup + join-back
-   sandwich around the provider boundary.
+   representative per distinct prompt key; ``BatchPipeline.run``
+   (``dedupe_prompts=True``) restores per-row results inside its
+   join-back on the representative id. ``fan_out_responses`` is the
+   standalone expansion, used by the ``prompt_dedup_fanout`` query.
 2. **Providers cap batch files AND queued tokens** (the public OpenAI
    Batch limits are 50,000 requests / 200 MB per file, plus a
    per-model cap on ENQUEUED PROMPT TOKENS across the batch queue — a
    line/byte-legal file can still be token-illegal to enqueue).
    ``plan_shards`` assigns every row a shard honoring all caps, using
    bucket-parallel exclusive prefix sums over the request-byte (and
-   optionally request-token) columns — no single-reducer window (same
-   two-job offset composition as ``functions.ids.assign_ids``). With a
-   token budget, each shard's total is ≤ ``max_tokens``, so an
-   orchestrator controls enqueued tokens by bounding in-flight shards.
+   optionally request-token) columns — no single-reducer window (the
+   per-bucket offsets come from ``functions.ids._bucket_offsets``, as
+   in ``assign_ids``). With a token budget, each shard's total is
+   ≤ ``max_tokens``, so an orchestrator controls enqueued tokens by
+   bounding in-flight shards.
 3. **Training consumption needs a deterministic global shuffle.**
    ``training_order`` derives (shard, position) from a portable hash of
    (seed, key): reproducible on any engine, re-runnable without RNG
@@ -38,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from genai_batch_processor_spark.functions import hashing
+from genai_batch_processor_spark.functions import hashing, ids
 
 # Public OpenAI Batch API file caps (requests per file / bytes per file).
 OPENAI_MAX_LINES = 50_000
@@ -95,28 +97,17 @@ def fan_out_responses(
 # -- 2. capped shard planning (bucket-parallel prefix sum) -------------------
 
 
-def exclusive_prefix_sum(
-    df: DataFrame,
-    *,
-    order_col: str,
-    value_col: str,
-    out_col: str,
-    buckets: int | None = None,
-) -> DataFrame:
-    """Running total of ``value_col`` over ``order_col`` order,
-    EXCLUSIVE of the current row, without an unpartitioned window.
-
-    ``order_col`` must be a dense 0-based ordinal (assign_ids output).
-    The ordinal space is cut into ``buckets`` equal ranges; a per-bucket
-    partitioned window computes local running sums and one tiny agg job
-    (``buckets`` rows collected) supplies each bucket's starting offset
-    — the same two-job composition as ``functions.ids.assign_ids``, so
-    parallelism is ``buckets``, not 1.
-    """
-    return exclusive_prefix_sums(
-        df, order_col=order_col, cols=[(value_col, out_col)],
-        buckets=buckets,
-    )
+def _ordinal_bucket(df: DataFrame, order_col: str) -> Column:
+    """Equal-width bucket of a dense 0-based ordinal: ``[0, max]`` cut
+    into 2 × ``defaultParallelism`` ranges, found with one ``max()``
+    job. Equal WIDTH on purpose: on a dense ordinal every bucket holds
+    the same row count, so the prefix-sum window scales with the
+    cluster (the log-scale ``assign_ids`` bucket tops out at ~64
+    useful tasks on dense keys)."""
+    buckets = df.sparkSession.sparkContext.defaultParallelism * 2
+    n = df.agg(F.max(order_col)).first()[0] or 0
+    span = max(1, (int(n) + buckets) // buckets)
+    return (F.col(order_col) / F.lit(span)).cast("long")
 
 
 def exclusive_prefix_sums(
@@ -124,34 +115,22 @@ def exclusive_prefix_sums(
     *,
     order_col: str,
     cols: list[tuple[str, str]],
-    buckets: int | None = None,
 ) -> DataFrame:
-    """:func:`exclusive_prefix_sum` over SEVERAL value columns in one
-    pass: one bucket assignment, one per-bucket totals job (all sums
-    aggregated together), one shared per-bucket window — so a planner
-    capping on bytes AND tokens pays one prefix-sum pass, not two.
-    ``cols`` is ``[(value_col, out_col), ...]``."""
-    spark = df.sparkSession
-    if buckets is None:
-        buckets = spark.sparkContext.defaultParallelism * 2
-    n = df.agg(F.max(order_col)).first()[0]
-    if n is None:
-        out = df
-        for _, out_col in cols:
-            out = out.withColumn(out_col, F.lit(None).cast("long"))
-        return out
-    span = max(1, (int(n) + buckets) // buckets)
-    bucket = (F.col(order_col) / F.lit(span)).cast("long")
-    bucketed = df.withColumn("__psb", bucket)
-    totals_rows = (
-        bucketed.groupBy("__psb")
-        .agg(
-            *[
-                F.sum(vc).cast("long").alias(f"__tot{i}")
-                for i, (vc, _) in enumerate(cols)
-            ]
-        )
-        .collect()
+    """Running totals of several value columns over ``order_col``
+    order, EXCLUSIVE of the current row, without an unpartitioned
+    window. ``cols`` is ``[(value_col, out_col), ...]``.
+
+    ``order_col`` must be a dense 0-based ordinal (assign_ids output).
+    One bucket assignment (:func:`_ordinal_bucket`), one per-bucket
+    totals job for every column together
+    (:func:`functions.ids._bucket_offsets`) and one shared per-bucket
+    window, so parallelism is the bucket count, not 1, and a planner
+    capping on bytes AND tokens pays one prefix-sum pass, not two."""
+    bucketed = df.withColumn("__psb", _ordinal_bucket(df, order_col))
+    offsets = ids._bucket_offsets(
+        bucketed,
+        "__psb",
+        [F.sum(vc).cast("long") for vc, _ in cols],
     )
     w = (
         Window.partitionBy("__psb")
@@ -159,18 +138,9 @@ def exclusive_prefix_sums(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     out = bucketed
-    for i, (vc, out_col) in enumerate(cols):
-        totals = {r["__psb"]: r[f"__tot{i}"] for r in totals_rows}
-        offsets: dict[int, int] = {}
-        acc = 0
-        for b in sorted(totals):
-            offsets[b] = acc
-            acc += totals[b]
-        offset_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
+    for (vc, out_col), offset in zip(cols, offsets):
         local = F.coalesce(F.sum(vc).over(w).cast("long"), F.lit(0))
-        out = out.withColumn(out_col, local + offset_map[F.col("__psb")])
+        out = out.withColumn(out_col, local + offset)
     return out.drop("__psb")
 
 
@@ -183,7 +153,6 @@ def plan_shards(
     max_bytes: int = OPENAI_MAX_BYTES,
     tokens_col: str | None = None,
     max_tokens: int | None = None,
-    buckets: int | None = None,
 ) -> DataFrame:
     """Assign every row a (byte_shard[, token_shard], line_shard,
     shard_key) honoring every provider cap STRICTLY, in input-id order.
@@ -245,9 +214,7 @@ def plan_shards(
             )
         tok_budget = max(1, max_tokens - int(max_row_tok))
         sums.append((tokens_col, "__cum_toks"))
-    with_cum = exclusive_prefix_sums(
-        df, order_col=id_col, cols=sums, buckets=buckets
-    )
+    with_cum = exclusive_prefix_sums(df, order_col=id_col, cols=sums)
     byte_shard = (F.col("__cum_bytes") / F.lit(budget)).cast("long")
     with_bs = with_cum.withColumn("byte_shard", byte_shard)
     shard_cols = ["byte_shard"]

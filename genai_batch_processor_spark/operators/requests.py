@@ -125,7 +125,7 @@ def build_openai_requests(
         json_response=json_response,
     )
     request = F.struct(
-        ids.custom_id_from_key(id_col).alias("custom_id"),
+        ids.custom_id(id_col).alias("custom_id"),
         F.lit("POST").alias("method"),
         F.lit(CHAT_COMPLETIONS_URL).alias("url"),
         body.alias("body"),

@@ -3171,7 +3171,7 @@ def q_incremental_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     prompt → mock inference → union with the carried-forward v1 result
     relation. ``recomputed`` records which boundary each row's answer
     came from. custom_ids derive from the natural key
-    (ids.custom_id_from_key — zero-shuffle), so a key's error fate is
+    (ids.custom_id — zero-shuffle), so a key's error fate is
     stable across snapshot versions."""
     from genai_batch_processor_spark.operators import snapshot
 
@@ -3180,7 +3180,7 @@ def q_incremental_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def answered(df: DataFrame, recomputed: bool) -> DataFrame:
         prompt = requests.classification_prompt("text", LABELS)
-        cid = ids.custom_id_from_key("doc_id")
+        cid = ids.custom_id("doc_id")
         err = mock.is_error_expr(cid)
         return df.select(
             "doc_id",

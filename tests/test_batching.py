@@ -8,6 +8,7 @@ the training order, and the dedup-sandwich invariants.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import ids
@@ -20,12 +21,17 @@ def _sized_docs(spark, sf_dir):
     return docs.withColumn("n_bytes", F.octet_length("text").cast("long"))
 
 
+def _n_ordinal_buckets(df):
+    bucket = batching._ordinal_bucket(df, "idx")
+    return df.select(bucket.alias("b")).distinct().count()
+
+
 def test_exclusive_prefix_sum_matches_pandas(spark, sf_dir):
     sized = _sized_docs(spark, sf_dir)
+    assert _n_ordinal_buckets(sized) >= 2
     got = (
-        batching.exclusive_prefix_sum(
-            sized, order_col="idx", value_col="n_bytes", out_col="cum",
-            buckets=7,
+        batching.exclusive_prefix_sums(
+            sized, order_col="idx", cols=[("n_bytes", "cum")]
         )
         .select("idx", "n_bytes", "cum")
         .toPandas()
@@ -39,13 +45,13 @@ def test_exclusive_prefix_sum_matches_pandas(spark, sf_dir):
 def test_plan_shards_honors_both_caps(spark, sf_dir):
     max_lines, max_bytes = 40, 16_384
     sized = _sized_docs(spark, sf_dir)
+    assert _n_ordinal_buckets(sized) >= 2
     planned = batching.plan_shards(
         sized,
         id_col="idx",
         bytes_col="n_bytes",
         max_lines=max_lines,
         max_bytes=max_bytes,
-        buckets=5,
     )
     per_shard = (
         planned.groupBy("shard_key")
@@ -162,8 +168,13 @@ def test_assign_ids_null_keys_match_single_window(spark):
     path as on the single-window fallback (nulls first)."""
     rows = [(i, None if i % 7 == 0 else f"k{i:03d}") for i in range(60)]
     df = spark.createDataFrame(rows, "rid long, key string")
-    bucketed = ids.assign_ids(df, "key", buckets=8)
-    fallback = ids.assign_ids(df, "key", buckets=1)
+    proxy = ids._order_proxy("key", df.schema["key"].dataType)
+    fine = ids._scale_free_bucket(proxy)
+    assert df.select(fine.alias("b")).distinct().count() >= 2
+    bucketed = ids.assign_ids(df, "key")
+    fallback = df.withColumn(
+        "idx", F.row_number().over(Window.orderBy("key")) - 1
+    )
     got = {r["rid"]: r["idx"] for r in bucketed.collect()}
     want = {r["rid"]: r["idx"] for r in fallback.collect()}
     # null-key rows form the FIRST ordinal block on both paths
@@ -187,6 +198,7 @@ def test_plan_shards_token_budget_caps(spark, sf_dir):
     sized = _sized_docs(spark, sf_dir).withColumn(
         "n_tokens", bpefn.token_count_bpe("text")
     )
+    assert _n_ordinal_buckets(sized) >= 2
     planned = batching.plan_shards(
         sized,
         id_col="idx",
@@ -195,7 +207,6 @@ def test_plan_shards_token_budget_caps(spark, sf_dir):
         max_bytes=max_bytes,
         tokens_col="n_tokens",
         max_tokens=max_tokens,
-        buckets=5,
     )
     per_shard = (
         planned.groupBy("shard_key")
@@ -250,11 +261,11 @@ def test_exclusive_prefix_sums_multi_column(spark, sf_dir):
     sized = _sized_docs(spark, sf_dir).withColumn(
         "n2", (F.col("n_bytes") % 7).cast("long")
     )
+    assert _n_ordinal_buckets(sized) >= 2
     fused = batching.exclusive_prefix_sums(
         sized,
         order_col="idx",
         cols=[("n_bytes", "c1"), ("n2", "c2")],
-        buckets=6,
     )
     got = fused.select("idx", "n_bytes", "n2", "c1", "c2").toPandas()
     got = got.sort_values("idx").reset_index(drop=True)

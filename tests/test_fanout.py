@@ -9,6 +9,7 @@ import os
 import random
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import fanout, ids
@@ -208,6 +209,24 @@ def test_scale_free_bucket_monotone_on_adversarial_doubles(spark):
     assert buckets == sorted(buckets), "bucket id not monotone in key order"
 
 
+def test_scale_free_bucket_share_on_dense_keys(spark):
+    """The parallelism bound assign_ids documents: on dense integer
+    keys the largest bucket (a 1/32 slice of the top binary exponent)
+    holds between 1/64 and 1/33 of the rows at any key count, so its
+    window stage has at most ~33-64 useful tasks. 65_536 = 2^16 and
+    67_584 = 2^16 * 33/32 sit on the two ends of the range."""
+    bucket = ids._scale_free_bucket(F.col("id").cast("double"))
+    for n in (16_000, 65_536, 67_584, 100_000):
+        largest = (
+            spark.range(n)
+            .groupBy(bucket.alias("b"))
+            .count()
+            .agg(F.max("count"))
+            .first()[0]
+        )
+        assert 33 * largest <= n <= 64 * largest, (n, largest)
+
+
 def test_assign_ids_one_pass_matches_single_window(spark):
     """The collect-free bucketed path must produce the exact ordinals
     of the single-window reference on unique keys of every proxy
@@ -224,10 +243,10 @@ def test_assign_ids_one_pass_matches_single_window(spark):
         rows = [(i, k) for i, k in enumerate(keys)]
         df = spark.createDataFrame(rows, "rid long, " + schema)
         got = {r["rid"]: r["idx"] for r in ids.assign_ids(df, "key").collect()}
-        want = {
-            r["rid"]: r["idx"]
-            for r in ids.assign_ids(df, "key", buckets=1).collect()
-        }
+        ref = df.withColumn(
+            "idx", F.row_number().over(Window.orderBy("key")) - 1
+        )
+        want = {r["rid"]: r["idx"] for r in ref.collect()}
         assert got == want, f"ordinal mismatch for {schema}"
 
 

@@ -85,7 +85,10 @@ def test_string_key_assign_ids_is_bucket_parallel(spark, sf_dir):
     docs = queries.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    out = ids.assign_ids(docs, "text", buckets=8)
+    proxy = ids._order_proxy("text", docs.schema["text"].dataType)
+    fine = ids._scale_free_bucket(proxy)
+    assert docs.select(fine.alias("b")).distinct().count() >= 2
+    out = ids.assign_ids(docs, "text")
     plan = spark._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
@@ -94,6 +97,79 @@ def test_string_key_assign_ids_is_bucket_parallel(spark, sf_dir):
     rows = out.select("text", "idx").collect()
     by_key = sorted(rows, key=lambda r: r["text"].encode("utf-8"))
     assert [r["idx"] for r in by_key] == list(range(len(rows)))
+
+
+def _shard_input(spark):
+    return spark.range(300).select(
+        F.col("id").alias("idx"),
+        (F.col("id") % 17 * 40).alias("n_bytes"),
+        (F.col("id") % 5 * 30).alias("n_tokens"),
+    )
+
+
+def _offset_users(spark, sf_dir):
+    """(name, build) for every caller of the bucket-offset primitive."""
+    from genai_batch_processor_spark.functions import ids
+    from genai_batch_processor_spark.operators import batching
+
+    docs = queries.load_table(spark, sf_dir, "documents")
+    shards = _shard_input(spark)
+    caps = {"max_lines": 40, "max_bytes": 4_000}
+    return [
+        ("assign_ids", lambda: ids.assign_ids(docs, "doc_id")),
+        (
+            "exclusive_prefix_sums",
+            lambda: batching.exclusive_prefix_sums(
+                shards, order_col="idx", cols=[("n_bytes", "c")]
+            ),
+        ),
+        ("plan_shards", lambda: batching.plan_shards(shards, **caps)),
+        (
+            "plan_shards_tokens",
+            lambda: batching.plan_shards(
+                shards, tokens_col="n_tokens", max_tokens=2_000, **caps
+            ),
+        ),
+    ]
+
+
+def test_bucket_offsets_fold_to_one_array_literal(spark, sf_dir):
+    """Per-bucket offsets reach the rows as a constant-folded array
+    literal read by ``element_at``: no ``from_json`` left to evaluate
+    per row, no map literal probed per row, and no single-partition
+    exchange anywhere in the plan."""
+    for name, build in _offset_users(spark, sf_dir):
+        qe = build()._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        assert "element_at([" in optimized, name
+        for marker in ("from_json", "JsonToStructs", "map(", "CreateMap"):
+            assert marker not in optimized, f"{name}: {marker}"
+        physical = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        assert "SinglePartition" not in physical, name
+
+
+def test_bucket_offsets_pre_job_counts(spark, sf_dir):
+    """Building each plan runs a fixed number of eager scheduler jobs:
+    the per-bucket collect for assign_ids; plus the ordinal max() for
+    exclusive_prefix_sums; plus the largest-row max() for plan_shards.
+    AQE runs each of those actions as a map-stage job and a result
+    job."""
+    sc = spark.sparkContext
+    want = {
+        "assign_ids": 2,
+        "exclusive_prefix_sums": 4,
+        "plan_shards": 6,
+        "plan_shards_tokens": 6,
+    }
+    for name, build in _offset_users(spark, sf_dir):
+        group = f"pre-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            build()
+        finally:
+            sc.setJobGroup(None, None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs == want[name], f"{name}: {n_jobs} pre-jobs"
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):

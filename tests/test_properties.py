@@ -190,13 +190,15 @@ def test_plan_shards_caps_hold_for_any_profile(spark, sizes, max_lines):
     max_bytes = 6_000
     rows = [(i, n) for i, n in enumerate(sizes)]
     df = spark.createDataFrame(rows, "idx long, n_bytes long")
+    if len(sizes) >= 2:
+        bucket = batching._ordinal_bucket(df, "idx")
+        assert df.select(bucket).distinct().count() >= 2
     planned = batching.plan_shards(
         df,
         id_col="idx",
         bytes_col="n_bytes",
         max_lines=max_lines,
         max_bytes=max_bytes,
-        buckets=3,
     )
     per_shard = planned.groupBy("shard_key").agg(
         F.count("*").alias("n"),
@@ -231,6 +233,9 @@ def test_plan_shards_token_caps_hold_for_any_profile(
     max_bytes, max_tokens = 6_000, 1_500
     rows = [(i, n, (n * 7) % 1_400) for i, n in enumerate(sizes)]
     df = spark.createDataFrame(rows, "idx long, n_bytes long, n_tokens long")
+    if len(sizes) >= 2:
+        bucket = batching._ordinal_bucket(df, "idx")
+        assert df.select(bucket).distinct().count() >= 2
     planned = batching.plan_shards(
         df,
         id_col="idx",
@@ -239,7 +244,6 @@ def test_plan_shards_token_caps_hold_for_any_profile(
         max_bytes=max_bytes,
         tokens_col="n_tokens",
         max_tokens=max_tokens,
-        buckets=3,
     )
     per_shard = planned.groupBy("shard_key").agg(
         F.count("*").alias("n"),
