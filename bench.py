@@ -242,12 +242,12 @@ def plan_info(df) -> dict | None:
     codegen ids, plan ids and temp paths are stripped before hashing —
     they vary per session while the plan shape does not.
 
-    CAVEAT for diff readers: queries that consume a session-cached
-    shared stage (the MinHash pair family, the trained-centroid and
-    corpus-index caches) digest an InMemoryRelation once the cache is
-    warm, so their digests depend on RUN ORDER within the bench
-    session — a changed digest for those queries is only a regression
-    if the plan SHAPE counters moved with it."""
+    CAVEAT for diff readers: queries that consume a session-shared
+    stage (the MinHash pair family, the trained-centroid and
+    corpus-index stages) digest a checkpoint leaf (Scan ExistingRDD)
+    once the stage is built, so their digests depend on RUN ORDER
+    within the bench session — a changed digest for those queries is
+    only a regression if the plan SHAPE counters moved with it."""
     try:
         jvm = df.sparkSession._jvm
         s = df._jdf.queryExecution().explainString(
@@ -259,6 +259,7 @@ def plan_info(df) -> dict | None:
         return None
     norm = re.sub(r"#\d+", "#", s)
     norm = re.sub(r"plan_id=\d+", "plan_id=", norm)
+    norm = re.sub(r"RDD\[\d+\]", "RDD[]", norm)  # checkpoint leaves
     # higher-order-function lambda variables carry a SESSION-GLOBAL
     # counter (lambda x_4 vs lambda x_7 for the same plan, depending on
     # how many lambda-bearing plans the session built earlier) — same
@@ -278,25 +279,27 @@ def plan_info(df) -> dict | None:
             )
         ),
         "single_partition": s.count("SinglePartition"),
-        "in_memory_scans": len(re.findall(r"InMemory(?:Relation|TableScan)", s)),
+        # scans of a materialized relation: a cache or a checkpoint leaf
+        "in_memory_scans": len(
+            re.findall(r"InMemory(?:Relation|TableScan)|Scan ExistingRDD", s)
+        ),
     }
 
 
 def stamp_shared_stage(plans: dict[str, dict]) -> None:
     """r8 verdict item 5: self-describe run-order-dependent digests.
-    Entries for queries that consume a session-shared persisted stage
+    Entries for queries that consume a session-shared materialized stage
     (queries.shared_stage_queries — source-introspected, never a
     hand-kept list) get the helpers they consume plus a
     ``cache_bypassed`` flag:
 
-    - ``true`` — the captured plan shows NO in-memory scan: the digest
-      is the COLD full-pipeline capture (cache invalidated or not yet
-      built at capture time) of a stage the timing may have read warm.
+    - ``true`` — the captured plan shows NO materialized scan: the
+      digest is the COLD full-pipeline capture (stage invalidated or
+      not yet built at capture time) of a stage the timing may have
+      read warm.
     - ``false`` (with ``shared_stages`` present) — the plan reads the
-      warm cache; note that formatted explain INLINES the cached
-      stage's build subtree, so shape counters (the 72 exchanges on
-      part_match_blocking_recall) count operators that never re-execute
-      — ``in_memory_scans`` > 0 is the tell.
+      built stage's checkpoint leaf — ``in_memory_scans`` > 0 is the
+      tell.
 
     Either way the entry now says what its digest means instead of
     reading as a regression to anyone without the run-order context."""

@@ -82,12 +82,10 @@ def file_leaf_stats(df: DataFrame) -> tuple[int, int] | None:
     leaves, read from the ANALYZED plan only (no optimization, no
     physical planning, no RDD conversion — analysis is work the
     downstream action needs regardless). Returns None when any leaf is
-    not a file-source relation (cached stage, local relation, range);
-    callers fall back. Also the per-micro-batch volume probe for the
-    streaming drains: a file-source micro-batch is a LogicalRelation
-    over exactly that epoch's files. The sizes are those of the file
-    index BEFORE partition pruning, so for a scan with partition
-    filters they overcount what the scan reads."""
+    not a file-source relation (cached stage, local relation, range,
+    a foreachBatch micro-batch); callers fall back. The sizes are
+    those of the file index BEFORE partition pruning, so for a scan
+    with partition filters they overcount what the scan reads."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         total = 0

@@ -562,14 +562,12 @@ def incremental_embedding_pairs(
     :func:`embedding_cell_index` of the batch) when the caller manages
     lifecycles — e.g. the streaming ingest loop, which sinks the batch
     index anyway; else the batch is assigned internally per call and
-    materialized ONCE as a driver-local relation (it is referenced by
+    materialized ONCE as a reliable checkpoint (it is referenced by
     the counts aggregate, the probe broadcast, and both sides of the
     new-new self-join — same materialize-once contract as
     dedup.incremental_near_dup_pairs). Bounded: the batch is
     broadcast-sized by contract (it is broadcast into the index scan
-    regardless), the same bound the ANN query side carries — and unlike
-    the previous persist(), a local relation leaves nothing cached for
-    the session's lifetime on the one-shot path.
+    regardless), the same bound the ANN query side carries.
 
     Cap mechanics: per-cell OLD counts come from counting index ROWS
     per cell — one map-side-combinable aggregate over the index's
@@ -594,18 +592,14 @@ def incremental_embedding_pairs(
             F.col(vec_col).alias("embedding"),
             V.norm(F.col(vec_col)).alias("nrm"),
         )
-        # materialize once via an eager localCheckpoint (bounded:
+        # materialize once via an eager checkpoint (bounded:
         # broadcast-sized batch) instead of persist() — no cache entry
         # outlives the call's references, and unlike collect() +
         # createDataFrame the materialized relation stays JVM-side (a
         # Python-local relation costs a Python-worker spin-up on every
         # downstream action — the r7 stream-marker regression class,
-        # bisected in r8). Trade-off: localCheckpoint blocks live on
-        # executors and cannot be recomputed if one is lost, so on
-        # preemptible/spot clusters a long-lived caller should pass
-        # batch_index (a relation whose lifecycle it controls — the
-        # streaming loop already does) rather than rely on this path.
-        b = assigned.localCheckpoint(eager=True)
+        # bisected in r8).
+        b = assigned.checkpoint(eager=True)
     batch_counts = b.groupBy("cell").agg(
         F.count(F.lit(1)).alias("batch_n")
     )

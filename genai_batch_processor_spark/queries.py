@@ -61,33 +61,36 @@ def _documents_with_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nested builds such as ivf_trained -> ivf_scored -> centroids) build
 # concurrently, while concurrent callers of the SAME key wait on the
 # one build in flight (single-flight). A build that raises reaches
-# every waiter and leaves nothing cached. Each build materializes its
-# own result (persist or localCheckpoint); the store has no policy.
-# Per name, at most _STAGE_CACHE_MAX built entries stay: older ones are
-# evicted oldest-first and DataFrames unpersisted, so iterating many
-# sf_dirs in one session cannot grow persisted memory without bound.
-# invalidate_shared_stages() is the staleness hook after a fixture is
-# regenerated mid-session — the store otherwise keeps serving the old
-# files, the same contract as Spark's own file-status cache.
+# every waiter and leaves nothing cached.
+#
+# One materialization policy, here and nowhere else: a build returns a
+# plain plan, and a DataFrame stage is stored as its eager reliable
+# checkpoint under spark.checkpoint.dir, a LogicalRDD leaf (the plan
+# shape of the at-scale path: an index loaded via sources/index_store
+# is a file-scan leaf). persist() keeps the full build plan, which
+# every consumer re-analyzes (~0.4 s of driver time per streaming
+# epoch, profiled in r14); localCheckpoint() blocks cannot be
+# recomputed, so one lost executor fails every later read. Nothing is
+# cached: eviction and invalidation just drop entries, and Spark's
+# ContextCleaner deletes a dropped stage's checkpoint files.
+# Per name, at most _STAGE_CACHE_MAX built entries stay (oldest evicted
+# first), so iterating many sf_dirs in one session cannot hold
+# checkpoints without bound. invalidate_shared_stages() is the
+# staleness hook after a fixture is regenerated mid-session — the store
+# otherwise keeps serving the old files, the same contract as Spark's
+# own file-status cache.
 _STAGE_CACHE_MAX = 8
 _STAGES: dict[tuple, Future] = {}
 _STAGES_LOCK = threading.Lock()
-
-
-def _release(fut: Future) -> None:
-    """Unpersist a dropped entry's DataFrame. On a checkpointed frame
-    this is a no-op; its blocks go to the ContextCleaner once the last
-    reference drops. Scalars and in-flight builds are just dropped."""
-    if fut.done() and isinstance(fut.result(), DataFrame):
-        fut.result().unpersist()
 
 
 def _shared(
     spark: SparkSession, name: str, sf_dir: str, *key, build: Callable[[], Any]
 ) -> Any:
     """Get-or-build the session-shared stage ``name`` for ``(sf_dir,
-    *key)``. The first caller runs ``build()``; concurrent callers of
-    the same key wait for it and get the same object."""
+    *key)``. The first caller runs ``build()`` (a DataFrame result is
+    checkpointed, see above); concurrent callers of the same key wait
+    for it and get the same object."""
     k = (name, spark.sparkContext.applicationId, sf_dir, *key)
     with _STAGES_LOCK:
         fut = _STAGES.get(k)
@@ -98,6 +101,8 @@ def _shared(
         return fut.result()
     try:
         value = build()
+        if isinstance(value, DataFrame):
+            value = value.checkpoint(eager=True)
     except BaseException as exc:
         with _STAGES_LOCK:
             if _STAGES.get(k) is fut:
@@ -108,27 +113,21 @@ def _shared(
         older = [
             o for o, f in _STAGES.items() if o[0] == name and o != k and f.done()
         ]
-        n_evict = max(0, len(older) + 1 - _STAGE_CACHE_MAX)
-        evicted = [_STAGES.pop(o) for o in older[:n_evict]]
+        for o in older[: max(0, len(older) + 1 - _STAGE_CACHE_MAX)]:
+            del _STAGES[o]
     fut.set_result(value)
-    for old in evicted:
-        _release(old)
     return value
 
 
 def invalidate_shared_stages(sf_dir: str | None = None) -> int:
-    """Unpersist and drop EVERY session-shared stage (or only those
-    built over ``sf_dir``): the official staleness hook after a
-    fixture or table is regenerated mid-session. Returns the number of
-    entries dropped."""
+    """Drop EVERY session-shared stage (or only those built over
+    ``sf_dir``): the official staleness hook after a fixture or table
+    is regenerated mid-session. Returns the number of entries
+    dropped."""
     with _STAGES_LOCK:
-        dropped = [
-            _STAGES.pop(k)
-            for k in list(_STAGES)
-            if sf_dir is None or k[2] == sf_dir
-        ]
-    for fut in dropped:
-        _release(fut)
+        dropped = [k for k in _STAGES if sf_dir is None or k[2] == sf_dir]
+        for k in dropped:
+            del _STAGES[k]
     return len(dropped)
 
 
@@ -137,7 +136,7 @@ def _near_dup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_components / dedup_components_star / dedup_survivors. Each of
     those used to re-shingle and re-hash the whole corpus; the pair
     relation is tiny (one row per verified duplicate pair), so it is
-    persisted once and every family member after the first reads the
+    materialized once and every family member after the first reads the
     materialized stage instead of recomputing the signature scan."""
     return _shared(
         spark,
@@ -145,12 +144,12 @@ def _near_dup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         build=lambda: dedup.near_dup_pairs(
             load_table(spark, sf_dir, "documents"), "doc_id", "text"
-        ).persist(),
+        ),
     )
 
 
 def _components_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One persisted label-propagation clustering per (session,
+    """One materialized label-propagation clustering per (session,
     sf_dir), shared by dedup_components, dedup_survivors, and
     dedup_cluster_stats — three queries otherwise re-running the same
     iterative CC over the shared pair stage. (dedup_components_star
@@ -162,7 +161,7 @@ def _components_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         build=lambda: dedup.connected_components(
             _near_dup_pairs_shared(spark, sf_dir)
-        ).persist(),
+        ),
     )
 
 
@@ -180,10 +179,10 @@ def _doc_count_shared(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _simhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One persisted SimHash pair stage per (session, sf_dir), shared
+    """One materialized SimHash pair stage per (session, sf_dir), shared
     by simhash_near_dup and the method-agreement audit — the audit
     references the pair relation twice in one plan, and without the
-    persist the banding fan-out would execute twice (round-4 review
+    materialization the banding fan-out would execute twice (round-4 review
     finding; mirrors _near_dup_pairs_shared)."""
 
     def build() -> DataFrame:
@@ -194,7 +193,7 @@ def _simhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
             max_bucket=dedup.adaptive_max_bucket(n),
             width=dedup.adaptive_simhash_width(n),
-        ).persist()
+        )
 
     return _shared(spark, "simhash_pairs", sf_dir, build=build)
 
@@ -266,7 +265,7 @@ def _ivf_scored_shared(
         )
         return similarity.scored_ivf_candidates(
             emb, qs, centroids=cents, n_probe=max(_SWEEP_PROBES)
-        ).localCheckpoint(eager=True)
+        )
 
     return _shared(
         spark,
@@ -294,21 +293,19 @@ def _topk_method_shared(
     def build() -> DataFrame:
         emb, qs = _ann_queries(spark, sf_dir)
         if method == "exact":
-            df = similarity.topk_bruteforce(emb, qs)
-        elif method == "int8":
-            df = similarity.topk_int8(emb, qs)
-        elif method == "lsh":
-            df = similarity.topk_lsh(emb, qs)
-        elif method in ("ivf", "ivf_trained"):
+            return similarity.topk_bruteforce(emb, qs)
+        if method == "int8":
+            return similarity.topk_int8(emb, qs)
+        if method == "lsh":
+            return similarity.topk_lsh(emb, qs)
+        if method in ("ivf", "ivf_trained"):
             scored = _ivf_scored_shared(
                 spark, sf_dir, trained=(method == "ivf_trained")
             )
-            df = similarity.topk_from_scored(
+            return similarity.topk_from_scored(
                 scored.select("query_id", "neighbor_id", "cosine")
             )
-        else:  # pragma: no cover - caller typo guard
-            raise ValueError(f"unknown ANN method {method!r}")
-        return df.localCheckpoint(eager=True)
+        raise ValueError(f"unknown ANN method {method!r}")  # caller typo
 
     return _shared(spark, "ann_topk", sf_dir, method, build=build)
 
@@ -584,7 +581,7 @@ def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components over the verified
     MinHash-LSH pair graph (iterative min-label propagation; DuckDB twin
-    is a recursive-CTE transitive closure). Shared persisted stage —
+    is a recursive-CTE transitive closure). Shared materialized stage —
     see _components_shared."""
     return _components_shared(spark, sf_dir)
 
@@ -627,7 +624,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (hamming ≤ 3 via nibble banding; shared
-    persisted stage — see _simhash_pairs_shared)."""
+    materialized stage — see _simhash_pairs_shared)."""
     pairs = _simhash_pairs_shared(spark, sf_dir)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
@@ -3803,7 +3800,7 @@ def q_part_match_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (brand, head noun of the name), in-block Levenshtein ≤ 2
     (operators/linkage.py — blocked candidate generation with the same
     oversized-block drop contract as the LSH bucket caps). Serves the
-    session-shared persisted single-key stage the recall audit also
+    session-shared materialized single-key stage the recall audit also
     consumes (see _part_pairs_shared)."""
     return _part_pairs_shared(spark, sf_dir, "single")
 
@@ -3834,11 +3831,11 @@ def _parts_with_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _part_pairs_shared(
     spark: SparkSession, sf_dir: str, which: str
 ) -> DataFrame:
-    """Shared persisted blocking stages (round-7 verdict item 5): the
+    """Shared materialized blocking stages (round-7 verdict item 5): the
     recall audit re-consumes BOTH candidate relations that
     part_match_candidates / part_match_multikey already compute — and
     references each more than once internally (count + common join).
-    Without the persist the audit re-ran both candidate generations
+    Without the materialization the audit re-ran both candidate generations
     from scratch (70 exchanges in BENCH_PLANS); with it, each blocking
     pass materializes once per (session, sf_dir), the same contract as
     the MinHash pair stage."""
@@ -3847,18 +3844,16 @@ def _part_pairs_shared(
     def build() -> DataFrame:
         parts = _parts_with_bands(spark, sf_dir)
         if which == "single":
-            df = linkage.blocked_pairs(
+            return linkage.blocked_pairs(
                 parts, "p_partkey", "p_name", ["p_brand", "noun"]
             )
-        else:
-            df = linkage.multi_pass_pairs(
-                parts,
-                "p_partkey",
-                "p_name",
-                ["p_brand", "noun"],
-                [["band_a"], ["band_b"]],
-            )
-        return df.persist()
+        return linkage.multi_pass_pairs(
+            parts,
+            "p_partkey",
+            "p_name",
+            ["p_brand", "noun"],
+            [["band_a"], ["band_b"]],
+        )
 
     return _shared(spark, "part_pairs", sf_dir, which, build=build)
 
@@ -3891,7 +3886,7 @@ def q_part_match_blocking_recall(
     exists so a future blocking edit that silently breaks the
     guarantee fails the parity gate, not a production run.
 
-    Both candidate relations come from the session-shared persisted
+    Both candidate relations come from the session-shared materialized
     blocking stages (round-7 verdict item 5): the audit used to re-run
     both generations from scratch — 70 exchanges — although
     part_match_candidates / part_match_multikey had already computed
@@ -3938,9 +3933,9 @@ def q_near_dup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     in for the banded-MinHash pipeline on their corpus (the dedup
     analog of embedding_ann_recall). Integer division (div) keeps the
     ratios engine-exact; both pair relations are tiny aggregates by
-    the time they meet, and BOTH sides reuse shared persisted pair
+    the time they meet, and BOTH sides reuse shared materialized pair
     stages (the sim side is referenced twice in this plan — the
-    persist keeps the banding fan-out from executing twice)."""
+    materialization keeps the banding fan-out from executing twice)."""
     truth = _near_dup_pairs_shared(spark, sf_dir).select("id_a", "id_b")
     simp = _simhash_pairs_shared(spark, sf_dir).select("id_a", "id_b")
     both = truth.join(simp, ["id_a", "id_b"], "inner")
@@ -4015,7 +4010,7 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-size histogram of the near-dup components — the summary
     an operator reads before pulling the dedup trigger (how much of
     the corpus is duplicated, and in what clump sizes). Reuses the
-    shared persisted clustering (_components_shared); everything
+    shared materialized clustering (_components_shared); everything
     after the component aggregate runs on the |clusters| relation."""
     comps = _components_shared(spark, sf_dir)
     sizes = comps.groupBy("component_id").agg(
@@ -4037,21 +4032,13 @@ def _corpus_index_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the one-shot and streaming probes — the probe references the
     index twice per call, and an unmaterialized plan would re-shingle
     the corpus each time (round-4 review finding)."""
-    # localCheckpoint, not persist (r14): a persisted DataFrame keeps
-    # its FULL build plan (cache substitution happens at planning, not
-    # analysis), so every probe — and the streaming twin probes PER
-    # MICRO-BATCH — re-analyzed the whole shingle/window tree on each
-    # of its ~15 eager Dataset constructions (~0.4 s/epoch of driver
-    # time, profiled). The checkpointed index is a leaf, which is also
-    # the plan shape of the at-scale path (an index LOADED from parquet
-    # via sources/index_store is a file-scan leaf).
     return _shared(
         spark,
         "corpus_index",
         sf_dir,
         build=lambda: dedup.minhash_index(
             load_table(spark, sf_dir, "documents"), "doc_id", "text"
-        ).localCheckpoint(eager=True),
+        ),
     )
 
 
@@ -4084,8 +4071,6 @@ def _emb_index_shared(spark: SparkSession, sf_dir: str, cents: list) -> DataFram
     keys on the resolved k: a caller passing differently-trained
     centroids (explicit KMEANS_K vs adaptive k) must never be served an
     index assigned under the other set."""
-    # leaf, not persisted plan — same reasoning as
-    # _corpus_index_shared (the streaming twin probes per epoch)
     return _shared(
         spark,
         "emb_index",
@@ -4093,7 +4078,7 @@ def _emb_index_shared(spark: SparkSession, sf_dir: str, cents: list) -> DataFram
         similarity.centroid_fingerprint(cents),
         build=lambda: similarity.embedding_cell_index(
             load_table(spark, sf_dir, "embeddings"), cents
-        ).localCheckpoint(eager=True),
+        ),
     )
 
 
@@ -4119,7 +4104,7 @@ def q_incremental_embedding_near_dup(
     ingest idempotence screen exists to catch, and a structurally
     non-degenerate result at any scale.
 
-    Scale: index built once per session (persisted, cell-partitioned
+    Scale: index built once per session (materialized; cell-partitioned
     at rest); per-ingest cost scales with the batch — batch assignment
     is shuffle-free, batch and its per-cell counts broadcast into ONE
     index scan. Adaptive k (clustering.adaptive_k) keeps cells ~250
@@ -4187,7 +4172,7 @@ def q_incremental_embedding_stream(
         return (
             spark.read.parquet(pairs_root)
             .select("id_a", "id_b", "cosine")
-            .localCheckpoint(eager=True)
+            .checkpoint(eager=True)
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -4222,9 +4207,6 @@ def q_incremental_near_dup_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     from genai_batch_processor_spark.streaming import ingest
 
     docs = load_table(spark, sf_dir, "documents")
-    # Shared persisted index: every micro-batch probes the SAME corpus
-    # index — without the persist each probe re-shingles the corpus,
-    # the exact work incrementality exists to avoid.
     index = _corpus_index_shared(spark, sf_dir)
     new_docs = docs.filter(F.col("doc_id") % 10 == 3).select(
         (F.col("doc_id") + INC_DEDUP_OFFSET).alias("doc_id"), "text"
@@ -4249,14 +4231,14 @@ def q_incremental_near_dup_stream(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.col("id").alias("id_b"),
                 F.col("id").cast("double").alias("jaccard"),
             )
-        # Materialize past the temp-dir lifetime: localCheckpoint
+        # Materialize past the temp-dir lifetime: the checkpoint
         # truncates lineage so the relation no longer references the
         # about-to-be-deleted files (the read itself is the bounded
         # pair set, not a data-path collect).
         return (
             spark.read.parquet(pairs_root)
             .select("id_a", "id_b", "jaccard")
-            .localCheckpoint(eager=True)
+            .checkpoint(eager=True)
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -4335,7 +4317,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-aware split-integrity audit: near-dup pairs that straddle
     the train/val/test boundary leak evaluation content into training
     — the go/no-go check an eval pipeline runs BEFORE trusting held-out
-    numbers. Reuses the shared persisted MinHash pair stage and the
+    numbers. Reuses the shared materialized MinHash pair stage and the
     pure-hash split assignment (both independently oracle-verified);
     output is the per-(split_a, split_b) pair count with a leak flag.
 
@@ -4367,7 +4349,7 @@ def q_eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive. Training-side docs are never evicted; a val-test pair is
     leak-flagged by the audit but evicts nothing here.
 
-    Scale: rides the shared persisted pair stage; split labels are
+    Scale: rides the shared materialized pair stage; split labels are
     row-local hash functions of the ids (no label join), the evicted
     id set is bounded by the pair relation and broadcast into one
     corpus-scan aggregate."""
@@ -4417,15 +4399,13 @@ def _span_index_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One materialized corpus span index per (session, sf_dir) —
     probes must never re-shingle the indexed corpus (the same seam as
     the MinHash band index)."""
-    # leaf, not persisted plan — same reasoning as
-    # _corpus_index_shared (the streaming twin probes per epoch)
     return _shared(
         spark,
         "span_index",
         sf_dir,
         build=lambda: curation.span_index(
             load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True),
+        ),
     )
 
 
@@ -4433,7 +4413,7 @@ def q_incremental_span_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time span-containment screen: a new batch (the word-4+
     TAIL of every 10th document with a novel per-doc token appended,
     re-keyed into a disjoint id space — PARTIALLY contained in the
-    corpus by construction) probed against the persisted span index
+    corpus by construction) probed against the materialized span index
     (operators/curation.py:span_index / probe_span_index). The
     exact-containment analog of incremental_near_dup: the tail's
     interior spans are corpus spans (an n-gram of a suffix is an
@@ -4442,7 +4422,7 @@ def q_incremental_span_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the admit/trim decision signal at ingest.
 
     Scale: only the batch is exploded; the probe joins on the span
-    hash; the index is built once per session (persisted) and at rest
+    hash; the index is built once per session (materialized) and at rest
     is hash-bucketed parquet."""
     docs = load_table(spark, sf_dir, "documents")
     index = _span_index_shared(spark, sf_dir)
@@ -4513,7 +4493,7 @@ def q_incremental_span_dup_stream(
         return (
             spark.read.parquet(reports_root)
             .select("doc_id", "n_spans", "n_known_spans", "known_ppm")
-            .localCheckpoint(eager=True)
+            .checkpoint(eager=True)
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -4556,11 +4536,11 @@ def q_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _trained_centroids_shared(spark, sf_dir)
-    # Persisted AND shared per (session, sf_dir) like the other
+    # Materialized AND shared per (session, sf_dir) like the other
     # shared stages: embedding_near_dup_pairs references its input
     # three times (cell-count aggregate + both self-join sides), and
     # without the store each invocation in one session would stack a
-    # new persisted relation (round-4 advice: storage leak in
+    # new materialized relation (round-4 advice: storage leak in
     # long-lived sessions / test loops). fan_out before the argmin
     # assignment so BOTH the build and every reading consumer (three
     # references per pair query) run at full parallelism instead of on
@@ -4573,7 +4553,7 @@ def q_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         build=lambda: clustering.assign_cells_auto(
             fan_out(emb.select("vec_id", "embedding")), cents
-        ).persist(),
+        ),
     )
     pairs = similarity.embedding_near_dup_pairs(
         assigned, bucket_col="cell", max_cell=SEMDEDUP_MAX_CELL
@@ -5304,10 +5284,10 @@ QUERIES = {
 }
 
 
-# Session-shared persisted stages (the *_shared helpers above). A
-# query whose plan CONSUMES one of these digests an InMemoryRelation
-# once the cache is warm — so its bench plan digest depends on run
-# order within the session. bench.py stamps such entries
+# Session-shared materialized stages (the *_shared helpers above). A
+# query whose plan CONSUMES one of these digests a checkpoint leaf
+# (LogicalRDD) once the stage is built — so its bench plan digest
+# depends on run order within the session. bench.py stamps such entries
 # ("shared_stages" + "cache_bypassed", r8 verdict item 5) so a reader
 # of BENCH_PLANS.json knows a full-pipeline digest (e.g. the
 # 72-exchange part_match_blocking_recall) is the COLD capture of a

@@ -14,7 +14,9 @@ override via ``spark.conf`` or spark-submit).
 
 from __future__ import annotations
 
+import functools
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -26,6 +28,14 @@ _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+@functools.cache
+def _local_checkpoint_dir() -> tempfile.TemporaryDirectory:
+    """One temp checkpoint dir per process, removed at exit."""
+    return tempfile.TemporaryDirectory(
+        prefix="spark-checkpoint-", ignore_cleanup_errors=True
+    )
 
 
 def get_spark(app_name: str = "genai_batch_processor_spark") -> SparkSession:
@@ -78,6 +88,11 @@ def get_spark(app_name: str = "genai_batch_processor_spark") -> SparkSession:
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "31g"),
         )
+        # Shared stages are reliable checkpoints (queries._shared); a
+        # cluster sets spark.checkpoint.dir to shared storage instead.
+        builder = builder.config(
+            "spark.checkpoint.dir", _local_checkpoint_dir().name
+        ).config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -69,6 +69,18 @@ class _EpochLedger:
         self._paths.append(f"{self._root}/batch={epoch_id}")
 
 
+def _micro_batch_bytes(batch_df: DataFrame) -> int | None:
+    """File bytes a foreachBatch micro-batch reads (None if it is not a
+    file scan). PySpark passes the epoch as a LogicalRDD over its
+    planned file scan, whose partitions carry the file sizes."""
+    try:
+        leaf = batch_df._jdf.queryExecution().analyzed().collectLeaves()
+        parts = leaf.apply(0).rdd().partitions()
+        return sum(f.length() for p in parts for f in p.files())
+    except Exception:
+        return None
+
+
 def _drain_foreach_batch(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -88,15 +100,14 @@ def _drain_foreach_batch(
     steady-state trickle epochs the small floor (r13 verdict item 1:
     the previous constant 8 serialized exactly those catch-up epochs).
     Results are partitioning-independent by design."""
-    from genai_batch_processor_spark.functions import fanout as _fo
     from genai_batch_processor_spark.streaming import windows as _w
 
     def sized(batch_df: DataFrame, epoch_id: int) -> None:
-        stats = _fo.file_leaf_stats(batch_df)
-        n = _w.stream_partitions_for(
-            spark, stats[0] if stats else None
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        n = _w.stream_partitions_for(spark, _micro_batch_bytes(batch_df))
+        # batch_df plans in its own session (cloned at stream start),
+        # the probes' index-side joins in ``spark``: size both.
+        for s in (batch_df.sparkSession, spark):
+            s.conf.set("spark.sql.shuffle.partitions", str(n))
         process(batch_df, epoch_id)
 
     with _w.stream_state_partitions(spark):  # restore-on-exit scope

@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import os
 import random
+import re
 
 import pytest
 from pyspark.sql import Window
@@ -125,14 +126,29 @@ def test_stream_state_partitions_derives_from_path(spark, sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
-def test_drain_sizes_epochs_to_batch_volume(spark, tmp_path):
-    """_drain_foreach_batch must size spark.sql.shuffle.partitions per
-    epoch from that epoch's file bytes (r13 verdict item 1: the
-    constant 8 would serialize catch-up epochs at scale)."""
+def _planned_shuffle_partitions(df) -> list[int]:
+    """Partition counts of the hash exchanges in ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [int(n) for n in re.findall(r"hashpartitioning\(.*?, (\d+)\)", plan)]
+
+
+def test_drain_sizes_epochs_to_batch_volume(spark, tmp_path, monkeypatch):
+    """_drain_foreach_batch must size each epoch's shuffles from that
+    epoch's file bytes (r13 verdict item 1: the constant 8 would
+    serialize catch-up epochs at scale). The count derived at drain
+    start (volume unknown) is 8 and each epoch's is 13, so an exchange
+    planned inside the epoch shows which one took effect: on the
+    micro-batch (its session is a clone made at stream start) and on
+    the outer session (which roots the probes' index-side joins)."""
     import shutil
 
     from genai_batch_processor_spark.streaming import ingest
 
+    monkeypatch.setattr(
+        sw,
+        "stream_partitions_for",
+        lambda _spark, input_bytes=None: 8 if input_bytes is None else 13,
+    )
     src = str(tmp_path / "src")
     for i in range(2):
         (
@@ -140,10 +156,18 @@ def test_drain_sizes_epochs_to_batch_volume(spark, tmp_path):
             .write.mode("append")
             .parquet(src)
         )
-    seen: list[int] = []
+    seen: list[tuple[list[int], list[int]]] = []
 
     def probe(batch_df, epoch_id):
-        seen.append(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        key = (F.col("id") % 7).alias("m")
+        seen.append(
+            (
+                _planned_shuffle_partitions(batch_df.groupBy(key).count()),
+                _planned_shuffle_partitions(
+                    spark.range(100).groupBy(key).count()
+                ),
+            )
+        )
 
     stream = (
         spark.readStream.schema("id long")
@@ -151,13 +175,13 @@ def test_drain_sizes_epochs_to_batch_volume(spark, tmp_path):
         .parquet(src)
     )
     ckpt = str(tmp_path / "ckpt")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         ingest._drain_foreach_batch(spark, stream, probe, ckpt)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    assert len(seen) == 2
-    # tiny epochs -> the small floor, derived per epoch
-    assert all(n == sw.STREAM_PARTITIONS_BASE for n in seen)
+    assert seen == [([13], [13]), ([13], [13])]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 # -- scale-free assign_ids bucketing -----------------------------------------

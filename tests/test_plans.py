@@ -11,18 +11,96 @@ import re
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark import queries
+from genai_batch_processor_spark.operators import (
+    curation,
+    dedup,
+    linkage,
+    similarity,
+)
+
+
+def _docs(spark, sf_dir):
+    return queries.load_table(spark, sf_dir, "documents")
+
+
+def _simhash_pairs(spark, sf_dir):
+    n = queries._doc_count_shared(spark, sf_dir)
+    return dedup.simhash_near_dup_pairs(
+        _docs(spark, sf_dir),
+        "doc_id",
+        "text",
+        max_bucket=dedup.adaptive_max_bucket(n),
+        width=dedup.adaptive_simhash_width(n),
+    )
+
+
+def _rrf_of_operators(spark, sf_dir):
+    emb, qs = queries._ann_queries(spark, sf_dir)
+    return curation.rrf_fuse(
+        [similarity.topk_bruteforce(emb, qs), similarity.topk_int8(emb, qs)],
+        k_const=queries.RRF_K,
+        topk=similarity.TOPK_DEFAULT,
+    )
+
+
+def _embedding_probe_of_operators(spark, sf_dir):
+    emb = queries.load_table(spark, sf_dir, "embeddings")
+    cents = queries._trained_centroids_shared(spark, sf_dir)
+    batch = emb.filter(F.col("vec_id") % 10 == 3).select(
+        (F.col("vec_id") + queries.INC_DEDUP_OFFSET).alias("vec_id"),
+        "embedding",
+    )
+    return similarity.incremental_embedding_pairs(
+        similarity.embedding_cell_index(emb, cents),
+        batch,
+        cents,
+        max_cell=queries.SEMDEDUP_MAX_CELL,
+    )
+
+
+# Queries that serve a shared stage return its checkpoint leaf, whose
+# plan shows none of the operators these tests pin; their plan is read
+# from the operators the stage is built from (the queries.py builds).
+STAGE_OPERATORS = {
+    "near_dup_pairs": lambda spark, sf_dir: dedup.near_dup_pairs(
+        _docs(spark, sf_dir), "doc_id", "text"
+    ),
+    "simhash_near_dup": _simhash_pairs,
+    "rrf_fusion": _rrf_of_operators,
+    "incremental_embedding_near_dup": _embedding_probe_of_operators,
+    "part_match_candidates": lambda spark, sf_dir: linkage.blocked_pairs(
+        queries._parts_with_bands(spark, sf_dir),
+        "p_partkey",
+        "p_name",
+        ["p_brand", "noun"],
+    ),
+    "part_match_multikey": lambda spark, sf_dir: linkage.multi_pass_pairs(
+        queries._parts_with_bands(spark, sf_dir),
+        "p_partkey",
+        "p_name",
+        ["p_brand", "noun"],
+        [["band_a"], ["band_b"]],
+    ),
+}
 
 
 def _plan(spark, name, sf_dir):
-    df = queries.QUERIES[name](spark, sf_dir)
-    return spark._jvm.PythonSQLUtils.explainString(
+    """Formatted physical plan of query ``name`` (of its operators, for
+    the shared-stage queries in STAGE_OPERATORS). A plan that reads no
+    fixture table is a materialized leaf, not an operator plan, and
+    fails here instead of passing every assertion vacuously."""
+    df = STAGE_OPERATORS.get(name, queries.QUERIES[name])(spark, sf_dir)
+    plan = spark._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+    assert "Scan parquet" in plan, f"{name}: plan reads no fixture table"
+    return plan
 
 
 # queries whose plans must never funnel through one partition
@@ -196,9 +274,7 @@ def test_embedding_topk_broadcasts_queries(spark, sf_dir):
     corpus). q_embedding_topk itself now serves the session-shared
     materialized leaf (r14: _topk_method_shared), so the design must
     be read from the operator plan directly — the same convention as
-    the other shared-stage queries (see _plan note below)."""
-    from genai_batch_processor_spark.operators import similarity
-
+    the other shared-stage queries (see STAGE_OPERATORS)."""
     emb = queries.load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < queries.ANN_N_QUERIES)
     df = similarity.topk_bruteforce(emb, qs)
@@ -440,8 +516,6 @@ def test_int8_topk_broadcasts_queries_and_avoids_corpus_shuffle(
     rank windows (shortlist + final). Read from the operator plan, as
     in test_embedding_topk_broadcasts_queries: q_embedding_topk_int8
     serves the session-shared materialized leaf."""
-    from genai_batch_processor_spark.operators import similarity
-
     emb = queries.load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < queries.ANN_N_QUERIES)
     df = similarity.topk_int8(emb, qs)
@@ -493,15 +567,6 @@ def test_span_probe_broadcasts_batch_not_index(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "SinglePartition" not in plan
-
-
-def _fresh_part_pairs(sf_dir):
-    """Drop the session-shared stages built over sf_dir (r8) so these
-    plan tests read the OPERATOR's plan, not an InMemoryRelation left
-    by whichever test consumed the stage first — the store makes plan
-    text run-order-dependent, exactly the caveat BENCH_PLANS documents
-    for the other shared stages."""
-    queries.invalidate_shared_stages(sf_dir=sf_dir)
 
 
 def _stage_keys(name):
@@ -608,42 +673,55 @@ def test_shared_stage_distinct_keys_build_concurrently(spark):
         queries.invalidate_shared_stages(sf_dir=sf)
 
 
+def _built_as_checkpoint_leaf(spark, build):
+    """Run a shared-stage build and check how it is stored: as a
+    checkpoint leaf (the optimized plan is one LogicalRDD), with no
+    entry added to the persisted RDDs."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    df = build()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    return df
+
+
 def test_part_pairs_cache_invalidation_and_cap(spark, sf_dir):
     """r8 advice: the session-shared blocking stages need an official
-    eviction hook (fixture regenerated mid-session → stale persisted
-    stage) and a size cap (many sf_dirs in one session → unbounded
-    persisted memory). invalidate_shared_stages drops and unpersists
-    by sf_dir or wholesale; inserts past the per-name cap evict the
-    oldest entry, unpersisted."""
+    eviction hook (fixture regenerated mid-session → stale stage) and a
+    size cap (many sf_dirs in one session → unbounded stored stages).
+    invalidate_shared_stages drops by sf_dir or wholesale; inserts past
+    the per-name cap evict the oldest entry. Every stage is stored as a
+    checkpoint leaf, nothing persisted."""
     queries.invalidate_shared_stages()
     assert queries._STAGES == {}
 
-    df = queries._part_pairs_shared(spark, sf_dir, "single")
+    _built_as_checkpoint_leaf(
+        spark, lambda: queries._part_pairs_shared(spark, sf_dir, "single")
+    )
     assert len(_stage_keys("part_pairs")) == 1
-    assert df.storageLevel.useMemory  # persisted while cached
 
     # scoped invalidation: a different sf_dir string is untouched
     assert queries.invalidate_shared_stages(sf_dir="/no/such/dir") == 0
     assert len(_stage_keys("part_pairs")) == 1
     assert queries.invalidate_shared_stages(sf_dir=sf_dir) == 1
     assert _stage_keys("part_pairs") == []
-    assert not df.storageLevel.useMemory  # unpersisted on eviction
 
     # cap: shrink the (per-name) cap to 1 and insert a second entry —
-    # the first must be evicted and unpersisted, never just dropped
+    # the first must be evicted
     old_cap = queries._STAGE_CACHE_MAX
     try:
         queries._STAGE_CACHE_MAX = 1
-        first = queries._part_pairs_shared(spark, sf_dir, "single")
-        second = queries._part_pairs_shared(spark, sf_dir, "multi")
+        for which in ("single", "multi"):
+            _built_as_checkpoint_leaf(
+                spark,
+                lambda: queries._part_pairs_shared(spark, sf_dir, which),
+            )
         assert _stage_keys("part_pairs") == [
             ("part_pairs", spark.sparkContext.applicationId, sf_dir, "multi")
         ]
-        assert not first.storageLevel.useMemory
-        assert second.storageLevel.useMemory
         # wholesale invalidation drops the one surviving entry
         assert queries.invalidate_shared_stages() == 1
-        assert not second.storageLevel.useMemory
     finally:
         queries._STAGE_CACHE_MAX = old_cap
         queries.invalidate_shared_stages()
@@ -651,11 +729,12 @@ def test_part_pairs_cache_invalidation_and_cap(spark, sf_dir):
 
 def test_invalidate_shared_stages_covers_every_cache(spark, sf_dir):
     """r9 self-review: the staleness/eviction hook must cover ALL
-    session-shared persisted stages, not just the blocking stages the
-    r8 advice named. Populate two different stages, invalidate by
-    sf_dir, and require both dropped and unpersisted — and no
-    module-level *_CACHE dict may exist beside the one shared-stage
-    store, so a new cache cannot silently fall outside the hook."""
+    session-shared stages, not just the blocking stages the r8 advice
+    named. Populate two different stages (each a checkpoint leaf,
+    nothing persisted), invalidate by sf_dir, and require both dropped
+    — and no module-level *_CACHE dict may exist beside the one
+    shared-stage store, so a new cache cannot silently fall outside
+    the hook."""
     src_caches = {
         name
         for name, obj in vars(queries).items()
@@ -666,21 +745,81 @@ def test_invalidate_shared_stages_covers_every_cache(spark, sf_dir):
     )
 
     queries.invalidate_shared_stages()
-    pairs = queries._near_dup_pairs_shared(spark, sf_dir)
-    sim = queries._simhash_pairs_shared(spark, sf_dir)
-    assert pairs.storageLevel.useMemory and sim.storageLevel.useMemory
+    for helper in (queries._near_dup_pairs_shared, queries._simhash_pairs_shared):
+        _built_as_checkpoint_leaf(spark, lambda: helper(spark, sf_dir))
     assert queries.invalidate_shared_stages(sf_dir="/no/such/dir") == 0
     dropped = queries.invalidate_shared_stages(sf_dir=sf_dir)
     assert dropped >= 2
-    assert not pairs.storageLevel.useMemory
-    assert not sim.storageLevel.useMemory
     assert all(key[2] != sf_dir for key in queries._STAGES)
+
+
+def _emb_index(spark, sf_dir):
+    cents = queries._trained_centroids_shared(spark, sf_dir)
+    return queries._emb_index_shared(spark, sf_dir, cents)
+
+
+# Every DataFrame-valued shared stage, by the helper that serves it,
+# plus queries whose result is a checkpoint of their own.
+BLOCK_DROP_CASES = {
+    "near_dup_pairs": ("_near_dup_pairs_shared", queries._near_dup_pairs_shared),
+    "components": ("_components_shared", queries._components_shared),
+    "simhash_pairs": ("_simhash_pairs_shared", queries._simhash_pairs_shared),
+    **{
+        f"ivf_scored_{kind}": (
+            "_ivf_scored_shared",
+            partial(queries._ivf_scored_shared, trained=kind == "trained"),
+        )
+        for kind in ("plain", "trained")
+    },
+    **{
+        f"ann_topk_{m}": (
+            "_topk_method_shared",
+            partial(queries._topk_method_shared, method=m),
+        )
+        for m in ("exact", "int8", "lsh", "ivf", "ivf_trained")
+    },
+    "ann_truth": ("_ann_truth_shared", queries._ann_truth_shared),
+    **{
+        f"part_pairs_{w}": (
+            "_part_pairs_shared",
+            partial(queries._part_pairs_shared, which=w),
+        )
+        for w in ("single", "multi")
+    },
+    "corpus_index": ("_corpus_index_shared", queries._corpus_index_shared),
+    "emb_index": ("_emb_index_shared", _emb_index),
+    "span_index": ("_span_index_shared", queries._span_index_shared),
+    "semdedup_survivors": (None, queries.q_semdedup_survivors),
+    "incremental_near_dup_stream": (
+        None,
+        queries.q_incremental_near_dup_stream,
+    ),
+}
+
+
+def test_block_drop_cases_cover_every_dataframe_stage():
+    """A new DataFrame-valued ``_*_shared`` helper needs a case above."""
+    scalar ={"_doc_count_shared", "_trained_centroids_shared"}
+    covered = {helper for helper, _ in BLOCK_DROP_CASES.values()}
+    assert set(queries._SHARED_STAGE_HELPERS) - scalar <= covered
+
+
+@pytest.mark.parametrize("case", sorted(BLOCK_DROP_CASES))
+def test_shared_stage_survives_block_drop(spark, sf_dir, case):
+    """A stored stage stays readable after every persisted block in the
+    session is dropped, as after a lost executor: it is re-read from
+    its checkpoint files, never lost (a localCheckpoint fails here)."""
+    _, build = BLOCK_DROP_CASES[case]
+    df = build(spark, sf_dir)
+    n = df.count()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    assert df.count() == n
 
 
 def test_part_match_candidates_no_single_partition(spark, sf_dir):
     """The linkage self-join must stay block-local — no global funnel
     and no cartesian product anywhere in the plan."""
-    _fresh_part_pairs(sf_dir)
     plan = _plan(spark, "part_match_candidates", sf_dir)
     assert "SinglePartition" not in plan
     assert "Cartesian" not in plan
@@ -692,7 +831,6 @@ def test_part_match_multikey_plan_shape(spark, sf_dir):
     above the distinct-name self-join, never above a row-expanded
     relation (one levenshtein call per pass in the plan, and no
     cartesian/global funnel)."""
-    _fresh_part_pairs(sf_dir)
     plan = _plan(spark, "part_match_multikey", sf_dir)
     assert "SinglePartition" not in plan
     assert "Cartesian" not in plan

@@ -74,6 +74,8 @@ def main() -> None:
             .config("spark.eventLog.compress", "false")
             .config("spark.eventLog.rolling.enabled", "false")
             .config("spark.ui.enabled", "false")
+            .config("spark.checkpoint.dir", sess._local_checkpoint_dir().name)
+            .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         )
         spark = b.getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
