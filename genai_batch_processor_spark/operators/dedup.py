@@ -682,18 +682,19 @@ def incremental_near_dup_pairs(
     The batch's band relation is referenced by both probe paths, so it
     must be materialized once: pass ``batch_index`` (a prebuilt,
     caller-persisted ``minhash_index(new_docs)``) when the caller
-    manages lifecycles — e.g. a streaming ingest loop that keeps batch
-    indexes as probe extras and unpersists them on completion — else
-    the function persists one internally per call (bounded by the
-    batch size, but a long-running loop should prefer ``batch_index``
-    to avoid accumulating session cache entries). Pass a PERSISTED or
+    manages lifecycles — e.g. a streaming ingest loop that writes the
+    batch index beside the pairs and unpersists it after — else the
+    function materializes one internally per call with an eager
+    checkpoint (bounded by the batch size; no session cache entry
+    outlives the call's references, as in the embedding twin
+    ``similarity.incremental_embedding_pairs``). Pass a PERSISTED or
     store-loaded index for the corpus side too — a live unpersisted
     ``minhash_index(corpus)`` plan re-shingles the corpus once per
     reference."""
     new_index = (
         batch_index
         if batch_index is not None
-        else minhash_index(new_docs, id_col, text_col).persist()
+        else minhash_index(new_docs, id_col, text_col).checkpoint(eager=True)
     )
 
     # -- old-new: broadcast the batch into one index scan --------------

@@ -141,6 +141,12 @@ def compact_parquet(
     return n
 
 
+def epoch_dir(root: str, epoch: int) -> str:
+    """The ``{root}/batch={epoch}`` directory one micro-batch of an
+    epoch sink overwrites."""
+    return f"{root.rstrip('/')}/batch={epoch}"
+
+
 def _epoch_entries(spark: SparkSession, root: str) -> list[tuple[int, str]]:
     """(epoch, path) for every ``batch=N`` directory under ``root``."""
     jvm, path, fs = _fs(spark, root)
@@ -443,6 +449,19 @@ def drain_lease_holder(spark: SparkSession, root: str) -> str | None:
     if not fs.exists(p):
         return None
     return _read_small(spark, p)
+
+
+def scheme_marker(spark: SparkSession, root: str, name: str) -> str | None:
+    """The scheme fingerprint committed in ``root``'s ``name`` marker
+    (a one-line text dir the probe streams stamp before their first
+    epoch), or None when none is committed: no marker, or the empty
+    dir a write killed before its commit leaves behind."""
+    marker = root.rstrip("/") + "/" + name
+    _, path, fs = _fs(spark, marker)
+    if not fs.exists(path):
+        return None
+    rows = spark.read.text(marker).collect()
+    return rows[0][0] if rows else None
 
 
 @contextlib.contextmanager

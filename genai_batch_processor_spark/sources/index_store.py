@@ -933,11 +933,13 @@ def merge_span_index(
     span_words: int,
 ) -> None:
     """Fold an admitted batch's spans into the saved span index — the
-    span store's merge seam. Unlike the two probe-stream stores, no
-    streaming span sink exists (the span probe is a batch operator), so
-    the overlay is the relation the operator just admitted: pass the
-    admitted documents' ``operators.curation.span_index`` output (or
-    the admitted docs' raw span hashes as a one-column ``h`` relation).
+    span store's merge seam. Unlike the two pair-probe stores, no epoch
+    root is folded here: the overlay is the relation the caller admitted
+    — the admitted documents' ``operators.curation.span_index`` output,
+    the admitted docs' raw span hashes as a one-column ``h`` relation,
+    or the ``{out_dir}/spans`` epochs that
+    ``streaming.ingest.span_probe_stream_to_parquet`` sinks, read via
+    ``sources.compaction.read_epoch_sink``.
     Union + distinct (the store is a distinct-hash set), re-stamp the
     scheme fingerprint, write-new-then-swap — idempotent by
     construction."""
@@ -956,23 +958,18 @@ def _check_stream_marker(
     what: str,
 ) -> None:
     """A merge must refuse an overlay sunk under a different scheme —
-    the same guard the stream start and the base loader run. Missing
-    marker (never streamed, or a pre-marker layout) is fine when the
-    root also has no epochs; with epochs present it is unverifiable and
-    refused."""
+    the same guard the stream start and the base loader run. No
+    committed marker (never streamed, a pre-marker layout, or a killed
+    first stamp) is fine when the root also has no epochs; with epochs
+    present it is unverifiable and refused."""
     from genai_batch_processor_spark.sources import compaction
 
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(
-        epoch_root.rstrip("/") + "/" + marker_name
-    )
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(marker):
-        rows = spark.read.text(marker.toString()).collect()
-        if rows and rows[0][0] != want_fp:
+    got = compaction.scheme_marker(spark, epoch_root, marker_name)
+    if got is not None:
+        if got != want_fp:
             raise ValueError(
                 f"epoch overlay at {epoch_root} was sunk under {what} "
-                f"{rows[0][0][:12]} but the merge holds {want_fp[:12]} "
+                f"{got[:12]} but the merge holds {want_fp[:12]} "
                 "— folding would mix incomparable schemes; rebuild "
                 "instead"
             )

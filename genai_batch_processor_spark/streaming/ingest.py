@@ -19,26 +19,15 @@ instead of waiting for the last one:
 
 from __future__ import annotations
 
+import contextlib
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import ids
 from genai_batch_processor_spark.operators import dedup, responses
 from genai_batch_processor_spark.sources import compaction
-
-
-def _epoch_dirs(spark: SparkSession, root: str, before: int) -> list[str]:
-    """Directories covering every sunk epoch < ``before`` exactly once,
-    through the Hadoop FileSystem API — the writes go through Spark's
-    filesystem, so the discovery must too (a driver-local os.listdir
-    would silently return nothing for hdfs:// or s3a:// roots and drop
-    every cross-micro-batch pair). Compaction-aware: after a
-    maintenance run folded old epochs (sources/compaction.py), the
-    probe view is the compacted directory plus the epochs it doesn't
-    cover. Shared by both sink-based probe streams."""
-    from genai_batch_processor_spark.sources import compaction
-
-    return compaction.epoch_sink_paths(spark, root, before=before)
 
 
 class _EpochLedger:
@@ -53,7 +42,14 @@ class _EpochLedger:
     did) and append each processed epoch's directory after its writes.
     foreachBatch epochs are strictly increasing within a run, so every
     appended path is strictly earlier than any later epoch — the
-    probe-view contract is unchanged, only its discovery cost."""
+    probe-view contract is unchanged, only its discovery cost.
+
+    The listing goes through the Hadoop FileSystem API
+    (``compaction.epoch_sink_paths``), as the writes do — a driver-local
+    os.listdir would silently return nothing for hdfs:// or s3a://
+    roots — and is compaction-aware: after a maintenance run folded old
+    epochs, the probe view is the compacted directory plus the epochs it
+    doesn't cover."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self._spark = spark
@@ -62,11 +58,13 @@ class _EpochLedger:
 
     def earlier(self, epoch_id: int) -> list[str]:
         if self._paths is None:
-            self._paths = _epoch_dirs(self._spark, self._root, epoch_id)
+            self._paths = compaction.epoch_sink_paths(
+                self._spark, self._root, before=epoch_id
+            )
         return list(self._paths)
 
     def record(self, epoch_id: int) -> None:
-        self._paths.append(f"{self._root}/batch={epoch_id}")
+        self._paths.append(compaction.epoch_dir(self._root, epoch_id))
 
 
 def _micro_batch_bytes(batch_df: DataFrame) -> int | None:
@@ -118,6 +116,125 @@ def _drain_foreach_batch(
             .start()
         )
         q.awaitTermination()
+
+
+def _assert_scheme_marker(
+    spark: SparkSession,
+    root: str,
+    marker_name: str,
+    fp: str,
+    scheme: str,
+    remedy: str,
+) -> None:
+    """Create-or-compare a scheme fingerprint marker under a streamed
+    index root. The sunk per-epoch index rows are only meaningful
+    under the scheme that produced them (trained centroids for the
+    embedding probe, the MinHash constants for the band probe); a
+    RESTARTED stream holding a different scheme would otherwise union
+    earlier epochs' rows into its probe view and silently mis-bucket
+    every comparison (the at-rest stores carry the same guards in
+    sources/index_store.py — the streaming seam needs them too).
+    Marker I/O goes through Spark (underscore-prefixed dir: invisible
+    to any whole-directory scan, like _spark_metadata), so it works on
+    any Hadoop filesystem, not just file://."""
+    got = compaction.scheme_marker(spark, root, marker_name)
+    if got is None:
+        # No committed fingerprint — a first start, or a kill between
+        # the marker dir's creation and the text task's commit — means
+        # no earlier epoch committed either (the stamp precedes the
+        # first foreachBatch), so (re-)stamp instead of wedging every
+        # restart on the empty dir. A PURE-JVM one-row plan, never
+        # createDataFrame: a Python-local relation costs a Python
+        # worker spin-up per action (~5 s measured for a 1-row
+        # write.text — the r7 stream-bench regression, bisected to the
+        # marker commits in round 8); coalesce(1) because range()
+        # splits by default parallelism and 1 marker = 1 file.
+        one_row = spark.range(1).select(F.lit(fp).alias("value"))
+        one_row.coalesce(1).write.mode("overwrite").text(
+            f"{root.rstrip('/')}/{marker_name}"
+        )
+    elif got != fp:
+        raise ValueError(
+            f"streamed index at {root} was built under {scheme} "
+            f"{got[:12]} but this stream holds {scheme} {fp[:12]} — "
+            f"sunk epochs are not comparable across schemes. {remedy}"
+        )
+
+
+def _drain_epoch_sink(
+    stream_df: DataFrame,
+    index: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    *,
+    roots: tuple[str, str],
+    marker: str,
+    fp: str,
+    scheme: str,
+    remedy: str,
+    batch_rows: Callable[[DataFrame], DataFrame],
+    report: Callable[[DataFrame, DataFrame, DataFrame], DataFrame],
+    extend: bool,
+) -> None:
+    """The epoch-sink protocol the three sink-based probe streams share.
+    ``roots`` names the rows root (the batch's own index rows, the
+    scheme ``marker`` and the epoch ledger live there) and the report
+    root under ``out_dir``. Every non-empty micro-batch overwrites
+    ``{report root}/batch={epoch}`` with ``report(probe, batch_df,
+    rows)`` and then ``{rows root}/batch={epoch}`` with ``rows =
+    batch_rows(batch_df)``, so a replayed epoch rewrites the same two
+    directories with the same content. ``batch_rows`` persists its
+    relation when ``report`` reads it too; it is unpersisted after both
+    writes. The probe is ``index``, unioned — when ``extend`` — with
+    the rows root's sunk epochs strictly before this one, so
+    cross-micro-batch pairs are found exactly once, when the later side
+    arrives.
+
+    Drain lease on BOTH sink roots for the whole drain: the
+    uncommitted-epoch tripwire only covers the write window, but the
+    ledger's cached paths are live between commits too, so a
+    concurrent merge/compaction/GC must refuse for the drain's full
+    wall clock. Every lease taken is released on any exit, including a
+    refused acquire on the second root; a killed driver leaves the
+    lease, and the documented remedy (rerun the drain) re-acquires
+    then releases it. The tag is the drain's IDENTITY — the checkpoint
+    dir, stable across reruns — not the ephemeral appId:
+    acquire_drain_lease refuses a FOREIGN live lease (two distinct
+    drains may not share a root), and only a same-identity rerun may
+    overwrite its own stale lease. Two live drains cannot share a
+    checkpoint (Spark locks it), so a matching tag is always the
+    crashed predecessor."""
+    spark = index.sparkSession
+    rows_root, report_root = (f"{out_dir.rstrip('/')}/{r}" for r in roots)
+    _assert_scheme_marker(spark, rows_root, marker, fp, scheme, remedy)
+    ledger = _EpochLedger(spark, rows_root) if extend else None
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        probe = index
+        earlier = ledger.earlier(epoch_id) if ledger else []
+        if earlier:
+            probe = probe.unionByName(spark.read.parquet(*earlier))
+        rows = batch_rows(batch_df)
+        try:
+            report(probe, batch_df, rows).write.mode("overwrite").parquet(
+                compaction.epoch_dir(report_root, epoch_id)
+            )
+            rows.write.mode("overwrite").parquet(
+                compaction.epoch_dir(rows_root, epoch_id)
+            )
+        finally:
+            rows.unpersist()
+        if ledger:
+            ledger.record(epoch_id)
+
+    tag = f"ckpt={checkpoint_dir}"
+    with contextlib.ExitStack() as leases:
+        for root in (rows_root, report_root):
+            compaction.acquire_drain_lease(spark, root, tag)
+            leases.callback(compaction.release_drain_lease, spark, root)
+        _drain_foreach_batch(spark, stream_df, process, checkpoint_dir)
 
 
 def stream_response_lines(
@@ -191,148 +308,25 @@ def near_dup_probe_stream_to_parquet(
     same text to different band keys and silently miss every stored
     near-duplicate — it fails loudly instead (the MinHash twin of the
     embedding probe's ``_centroid_fp`` guard)."""
-    spark = index.sparkSession
-    idx_root = out_dir.rstrip("/") + "/index"
-    pairs_root = out_dir.rstrip("/") + "/pairs"
-    _assert_minhash_marker(spark, idx_root)
-    ledger = _EpochLedger(spark, idx_root)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        probe = index
-        earlier = ledger.earlier(epoch_id)
-        if earlier:
-            probe = probe.unionByName(spark.read.parquet(*earlier))
-        batch_index = dedup.minhash_index(
-            batch_df, id_col, text_col, fanout=False
-        ).persist()
-        try:
-            pairs = dedup.incremental_near_dup_pairs(
-                probe, batch_df, id_col, text_col, batch_index=batch_index
-            )
-            pairs.write.mode("overwrite").parquet(
-                pairs_root + f"/batch={epoch_id}"
-            )
-            batch_index.write.mode("overwrite").parquet(
-                idx_root + f"/batch={epoch_id}"
-            )
-        finally:
-            batch_index.unpersist()
-        ledger.record(epoch_id)
-
-    # Drain lease on BOTH sink roots for the whole drain (r9
-    # self-review): the uncommitted-epoch tripwire only covers the
-    # write window, but this ledger's cached paths are live between
-    # commits too — a concurrent merge/compaction/GC must refuse for
-    # the drain's full wall clock. try/finally releases on any exit;
-    # a killed driver leaves the lease, and the documented remedy
-    # (rerun the drain) re-acquires then releases it. The tag is the
-    # drain's IDENTITY — the checkpoint dir, stable across reruns —
-    # not the ephemeral appId: since r10 acquire_drain_lease refuses a
-    # FOREIGN live lease (two distinct drains may not share a root),
-    # and only a same-identity rerun may overwrite its own stale
-    # lease. Two live drains cannot share a checkpoint (Spark locks
-    # it), so a matching tag is always the crashed predecessor.
-    tag = f"ckpt={checkpoint_dir}"
-    compaction.acquire_drain_lease(spark, idx_root, tag)
-    compaction.acquire_drain_lease(spark, pairs_root, tag)
-    try:
-        _drain_foreach_batch(spark, stream_df, process, checkpoint_dir)
-    finally:
-        compaction.release_drain_lease(spark, idx_root)
-        compaction.release_drain_lease(spark, pairs_root)
-
-
-def _assert_scheme_marker(
-    spark: SparkSession,
-    root: str,
-    fp: str,
-    marker_name: str,
-    built_under: str,
-    holds: str,
-    remedy: str,
-) -> None:
-    """Create-or-compare a scheme fingerprint marker under a streamed
-    index root. The sunk per-epoch index rows are only meaningful
-    under the scheme that produced them (trained centroids for the
-    embedding probe, the MinHash constants for the band probe); a
-    RESTARTED stream holding a different scheme would otherwise union
-    earlier epochs' rows into its probe view and silently mis-bucket
-    every comparison (the at-rest stores carry the same guards in
-    sources/index_store.py — the streaming seam needs them too).
-    Marker I/O goes through Spark (underscore-prefixed dir: invisible
-    to any whole-directory scan, like _spark_metadata), so it works on
-    any Hadoop filesystem, not just file://."""
-    marker = root.rstrip("/") + "/" + marker_name
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(marker)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(path):
-        rows = spark.read.text(marker).collect()
-        if not rows:
-            # A kill between the marker dir's creation and the text
-            # task's commit leaves an empty dir: no committed
-            # fingerprint means no earlier epoch committed either
-            # (marker write precedes the first foreachBatch), so
-            # re-stamp instead of wedging every restart on IndexError.
-            _write_marker(spark, marker, fp, overwrite=True)
-            return
-        got = rows[0][0]
-        if got != fp:
-            raise ValueError(
-                f"streamed index at {root} was built under "
-                f"{built_under} {got[:12]} but this stream holds "
-                f"{holds} {fp[:12]} — sunk epochs are not comparable "
-                f"across schemes. {remedy}"
-            )
-    else:
-        _write_marker(spark, marker, fp)
-
-
-def _write_marker(
-    spark: SparkSession, marker: str, fp: str, overwrite: bool = False
-) -> None:
-    """One-row marker write as a PURE-JVM plan (``range(1)`` + lit),
-    never ``createDataFrame``: a Python-local relation costs a Python
-    worker spin-up per ACTION (~5 s measured for a 1-row write.text on
-    this stack — the r7 stream-bench regression, bisected to the
-    marker commits in round 8), while the JVM-side plan is ~0.3 s."""
-    one_row = (
-        spark.range(1).select(F.lit(fp).alias("value")).coalesce(1)
-    )  # range() splits by default parallelism; 1 marker = 1 file
-    writer = one_row.write
-    if overwrite:
-        writer = writer.mode("overwrite")
-    writer.text(marker)
-
-
-def _assert_centroid_marker(
-    spark: SparkSession, root: str, fp: str
-) -> None:
-    _assert_scheme_marker(
-        spark,
-        root,
-        fp,
-        "_centroid_fp",
-        "centroid set",
-        "centroid set",
-        "Resume with the original centroids, or start a fresh "
-        "out_dir/checkpoint and re-probe.",
-    )
-
-
-def _assert_minhash_marker(spark: SparkSession, root: str) -> None:
-    _assert_scheme_marker(
-        spark,
-        root,
-        dedup.minhash_scheme_fingerprint(),
-        "_minhash_fp",
-        "MinHash scheme",
-        "MinHash scheme",
-        "The MinHash constants (shingle width / signature length / "
-        "band geometry / hash family) changed since the sink was "
+    _drain_epoch_sink(
+        stream_df,
+        index,
+        out_dir,
+        checkpoint_dir,
+        roots=("index", "pairs"),
+        marker="_minhash_fp",
+        fp=dedup.minhash_scheme_fingerprint(),
+        scheme="MinHash scheme",
+        remedy="The MinHash constants (shingle width / signature length "
+        "/ band geometry / hash family) changed since the sink was "
         "started; start a fresh out_dir/checkpoint and re-probe.",
+        batch_rows=lambda batch: dedup.minhash_index(
+            batch, id_col, text_col, fanout=False
+        ).persist(),
+        report=lambda probe, batch, rows: dedup.incremental_near_dup_pairs(
+            probe, batch, id_col, text_col, batch_index=rows
+        ),
+        extend=True,
     )
 
 
@@ -371,58 +365,32 @@ def embedding_probe_stream_to_parquet(
     incompatible cell space."""
     from genai_batch_processor_spark.operators import clustering, similarity
 
-    spark = index.sparkSession
-    idx_root = out_dir.rstrip("/") + "/index"
-    pairs_root = out_dir.rstrip("/") + "/pairs"
-    _assert_centroid_marker(
-        spark, idx_root, similarity.centroid_fingerprint(centroids)
-    )
-    ledger = _EpochLedger(spark, idx_root)
     # Build the centroid argmin expression ONCE for the whole drain:
     # every epoch assigns with the same centroids, and rebuilding the
     # k × dim literal tree per micro-batch was pure per-epoch driver
     # cost (r13 verdict item 3).
     assigner = clustering.cell_assigner(centroids)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        probe = index
-        earlier = ledger.earlier(epoch_id)
-        if earlier:
-            probe = probe.unionByName(spark.read.parquet(*earlier))
-        batch_index = similarity.embedding_cell_index(
-            batch_df, centroids, assigner=assigner
-        ).persist()
-        try:
-            pairs = similarity.incremental_embedding_pairs(
-                probe,
-                batch_df,
-                centroids,
-                max_cell=max_cell,
-                batch_index=batch_index,
+    _drain_epoch_sink(
+        stream_df,
+        index,
+        out_dir,
+        checkpoint_dir,
+        roots=("index", "pairs"),
+        marker="_centroid_fp",
+        fp=similarity.centroid_fingerprint(centroids),
+        scheme="centroid set",
+        remedy="Resume with the original centroids, or start a fresh "
+        "out_dir/checkpoint and re-probe.",
+        batch_rows=lambda batch: similarity.embedding_cell_index(
+            batch, centroids, assigner=assigner
+        ).persist(),
+        report=lambda probe, batch, rows: (
+            similarity.incremental_embedding_pairs(
+                probe, batch, centroids, max_cell=max_cell, batch_index=rows
             )
-            pairs.write.mode("overwrite").parquet(
-                pairs_root + f"/batch={epoch_id}"
-            )
-            batch_index.write.mode("overwrite").parquet(
-                idx_root + f"/batch={epoch_id}"
-            )
-        finally:
-            batch_index.unpersist()
-        ledger.record(epoch_id)
-
-    # same whole-drain lease discipline as the MinHash twin (r9
-    # self-review): the ledger's cached paths are live between
-    # commits; checkpoint-identity tag for the same reasons
-    tag = f"ckpt={checkpoint_dir}"
-    compaction.acquire_drain_lease(spark, idx_root, tag)
-    compaction.acquire_drain_lease(spark, pairs_root, tag)
-    try:
-        _drain_foreach_batch(spark, stream_df, process, checkpoint_dir)
-    finally:
-        compaction.release_drain_lease(spark, idx_root)
-        compaction.release_drain_lease(spark, pairs_root)
+        ),
+        extend=True,
+    )
 
 
 def span_probe_stream_to_parquet(
@@ -466,40 +434,24 @@ def span_probe_stream_to_parquet(
 
     if span_words is None:
         span_words = curation.SPAN_WORDS_DEFAULT
-    spark = index.sparkSession
-    spans_root = out_dir.rstrip("/") + "/spans"
-    reports_root = out_dir.rstrip("/") + "/reports"
-    _assert_scheme_marker(
-        spark,
-        spans_root,
-        index_store._span_scheme_fingerprint(spark, span_words),
-        "_span_fp",
-        "span scheme",
-        "span scheme",
-        "The span width / hash / shingling changed since the sink was "
-        "started; start a fresh out_dir/checkpoint and re-probe.",
+    _drain_epoch_sink(
+        stream_df,
+        index,
+        out_dir,
+        checkpoint_dir,
+        roots=("spans", "reports"),
+        marker="_span_fp",
+        fp=index_store._span_scheme_fingerprint(
+            index.sparkSession, span_words
+        ),
+        scheme="span scheme",
+        remedy="The span width / hash / shingling changed since the sink "
+        "was started; start a fresh out_dir/checkpoint and re-probe.",
+        batch_rows=lambda batch: curation.span_index(
+            batch, text_col, span_words
+        ),
+        report=lambda probe, batch, rows: curation.probe_span_index(
+            probe, batch, id_col, text_col, span_words
+        ),
+        extend=False,
     )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        report = curation.probe_span_index(
-            index, batch_df, id_col, text_col, span_words
-        )
-        report.write.mode("overwrite").parquet(
-            reports_root + f"/batch={epoch_id}"
-        )
-        curation.span_index(
-            batch_df, text_col, span_words
-        ).write.mode("overwrite").parquet(
-            spans_root + f"/batch={epoch_id}"
-        )
-
-    tag = f"ckpt={checkpoint_dir}"
-    compaction.acquire_drain_lease(spark, spans_root, tag)
-    compaction.acquire_drain_lease(spark, reports_root, tag)
-    try:
-        _drain_foreach_batch(spark, stream_df, process, checkpoint_dir)
-    finally:
-        compaction.release_drain_lease(spark, spans_root)
-        compaction.release_drain_lease(spark, reports_root)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.plans import pipeline as plans
+from genai_batch_processor_spark.sources import compaction
 
 
 def run_stream_inference(
@@ -65,11 +66,13 @@ def run_stream_inference(
             F.to_json("resp").alias("resp_json"),
         )
         flat.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "results", f"batch={epoch_id}")
+            compaction.epoch_dir(os.path.join(out_dir, "results"), epoch_id)
         )
         errors.select(F.to_json("resp").alias("resp_json")).write.mode(
             "overwrite"
-        ).parquet(os.path.join(out_dir, "errors", f"batch={epoch_id}"))
+        ).parquet(
+            compaction.epoch_dir(os.path.join(out_dir, "errors"), epoch_id)
+        )
         pipe.cleanup()
 
     q = (

@@ -32,6 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from genai_batch_processor_spark.sources import compaction
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -393,7 +396,7 @@ def run_to_parquet(
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch={epoch_id}"
+            compaction.epoch_dir(out_dir, epoch_id)
         )
 
     q = (

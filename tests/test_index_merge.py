@@ -703,6 +703,31 @@ def test_lease_symmetry_and_maintenance_tripwire(spark, tmp_path):
     assert not os.path.exists(marker)
 
 
+def test_refused_drain_start_releases_its_first_lease(spark, tmp_path):
+    """A drain whose SECOND sink root is foreign-leased refuses to
+    start, and must not keep the lease it already took on the first
+    root: a leftover lease would make every later merge, compaction
+    or GC on that root refuse."""
+    import pytest
+
+    docs = load_table(spark, SF, "documents").limit(20)
+    index = dedup.minhash_index(docs, "doc_id", "text")
+    shards = str(tmp_path / "shards")
+    out = str(tmp_path / "out")
+    idx_root = os.path.join(out, "index")
+    pairs_root = os.path.join(out, "pairs")
+    docs.select("doc_id", "text").write.parquet(shards)
+    os.makedirs(pairs_root)
+    compaction.acquire_drain_lease(spark, pairs_root, "foreign")
+    try:
+        with pytest.raises(ValueError, match="already leased"):
+            _drain_minhash(spark, index, shards, str(tmp_path / "ckpt"), out)
+        assert compaction.drain_lease_holder(spark, idx_root) is None
+        assert compaction.drain_lease_holder(spark, pairs_root) == "foreign"
+    finally:
+        compaction.release_drain_lease(spark, pairs_root)
+
+
 def test_displaced_partition_repair(spark, tmp_path):
     """r9 advice (medium): a swap crash between rename(dst→old) and
     rename(src→dst) leaves the partition's ONLY copy in the displaced

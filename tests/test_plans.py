@@ -64,6 +64,17 @@ def _embedding_probe_of_operators(spark, sf_dir):
     )
 
 
+def _incremental_probe_of_operators(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    batch = docs.filter(F.col("doc_id") % 10 == 3).select(
+        (F.col("doc_id") + queries.INC_DEDUP_OFFSET).alias("doc_id"),
+        "text",
+    )
+    return dedup.incremental_near_dup_pairs(
+        dedup.minhash_index(docs, "doc_id", "text"), batch, "doc_id", "text"
+    )
+
+
 # Queries that serve a shared stage return its checkpoint leaf, whose
 # plan shows none of the operators these tests pin; their plan is read
 # from the operators the stage is built from (the queries.py builds).
@@ -74,6 +85,7 @@ STAGE_OPERATORS = {
     "simhash_near_dup": _simhash_pairs,
     "rrf_fusion": _rrf_of_operators,
     "incremental_embedding_near_dup": _embedding_probe_of_operators,
+    "incremental_near_dup": _incremental_probe_of_operators,
     "part_match_candidates": lambda spark, sf_dir: linkage.blocked_pairs(
         queries._parts_with_bands(spark, sf_dir),
         "p_partkey",
@@ -1001,3 +1013,23 @@ def test_grouped_heavy_hitters_one_sketch_pass_and_broadcasts(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
     assert "LeftSemi" in plan
     assert plan.count("BroadcastExchange") >= 2  # candidates + totals
+
+
+def test_incremental_near_dup_pairs_leaves_no_cache_entry(spark, sf_dir):
+    """Without a caller-owned ``batch_index`` the probe materializes the
+    batch band index itself; repeated calls must leave no session cache
+    entry behind (a persisted copy nobody unpersists)."""
+    docs = _docs(spark, sf_dir)
+    index = dedup.minhash_index(
+        docs.filter(F.col("doc_id") % 10 != 3), "doc_id", "text"
+    )
+    batch = docs.filter(F.col("doc_id") % 10 == 3)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.getClass().getDeclaredField("cachedData")
+    entries.setAccessible(True)
+    before = entries.get(cache).size()
+    for _ in range(2):
+        assert dedup.incremental_near_dup_pairs(
+            index, batch, "doc_id", "text"
+        ).count() > 0
+    assert entries.get(cache).size() == before

@@ -696,3 +696,127 @@ def test_span_sink_probe_restart_across_checkpoint(spark, tmp_path):
         assert sorted(os.listdir(os.path.join(out, "reports"))) == before
     finally:
         index.unpersist()
+
+
+def test_probe_drain_job_ceilings(spark, tmp_path):
+    """Each sink-based probe drain over a 2-epoch sf0.001 stream stays
+    under a Spark job ceiling: the jobs run from the caller's job group
+    (scheme fingerprint, marker) plus the jobs its stream runs (in the
+    job group named by the query's run id). The ceilings are the counts
+    the three drains ran before they shared one epoch-sink driver;
+    cutting the per-epoch fixed cost lowers them."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from genai_batch_processor_spark.operators import (
+        clustering,
+        curation,
+        dedup,
+        similarity,
+    )
+    from genai_batch_processor_spark.queries import INC_DEDUP_OFFSET
+    from genai_batch_processor_spark.streaming import ingest
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):  # synchronous with start()
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    sf = "/root/testdata/sf0.001"
+    docs = load_table(spark, sf, "documents")
+    emb = load_table(spark, sf, "embeddings")
+    new_docs = docs.filter(F.col("doc_id") % 10 == 3).select(
+        (F.col("doc_id") + INC_DEDUP_OFFSET).alias("doc_id"), "text"
+    )
+    new_vecs = emb.filter(F.col("vec_id") % 10 == 3).select(
+        (F.col("vec_id") + INC_DEDUP_OFFSET).alias("vec_id"), "embedding"
+    )
+    cents = clustering.centroids_from_cells(clustering.kmeans_cells(emb))
+    band = dedup.minhash_index(docs, "doc_id", "text").persist()
+    cell = similarity.embedding_cell_index(emb, cents).persist()
+    span = curation.span_index(docs).persist()
+    cases = [
+        # name, arrivals, schema, report root, drain, ceiling
+        (
+            "near_dup",
+            new_docs,
+            "doc_id long, text string",
+            "pairs",
+            lambda s, o, c: ingest.near_dup_probe_stream_to_parquet(
+                s, band, "doc_id", "text", o, c
+            ),
+            28,
+        ),
+        (
+            "embedding",
+            new_vecs,
+            "vec_id long, embedding array<float>",
+            "pairs",
+            lambda s, o, c: ingest.embedding_probe_stream_to_parquet(
+                s, cell, cents, o, c
+            ),
+            43,
+        ),
+        (
+            "span",
+            new_docs,
+            "doc_id long, text string",
+            "reports",
+            lambda s, o, c: ingest.span_probe_stream_to_parquet(
+                s, span, o, c
+            ),
+            16,
+        ),
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        for idx in (band, cell, span):  # fill the caches uncounted
+            assert idx.count() > 0
+        for name, arrivals, schema, report_root, drain, ceiling in cases:
+            key = arrivals.columns[0]
+            shards = str(tmp_path / name / "shards")
+            for rest in (3, 13):  # one file per epoch, both non-empty
+                arrivals.filter(F.col(key) % 20 == rest).coalesce(
+                    1
+                ).write.mode("append").parquet(shards)
+            out = str(tmp_path / name / "out")
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(shards)
+            )
+            group = f"drain-job-ceiling-{name}"
+            first_run = len(listener.ids)
+            sc.setJobGroup(group, name)
+            try:
+                drain(stream, out, str(tmp_path / name / "ckpt"))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            groups = [group] + listener.ids[first_run:]
+            n_jobs = sum(len(tracker.getJobIdsForGroup(g)) for g in groups)
+            epochs = [
+                d
+                for d in os.listdir(os.path.join(out, report_root))
+                if d.startswith("batch=")
+            ]
+            assert len(epochs) == 2, (name, epochs)
+            assert n_jobs <= ceiling, (name, n_jobs, ceiling)
+    finally:
+        spark.streams.removeListener(listener)
+        for idx in (band, cell, span):
+            idx.unpersist()

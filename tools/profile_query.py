@@ -47,42 +47,21 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     evdir = tempfile.mkdtemp(prefix="spark_evlog_")
 
-    # Event log must be configured before the JVM starts: build the
-    # session here rather than through get_spark (same configs + evlog).
-    from genai_batch_processor_spark import session as sess
-
-    orig = sess.get_spark
-
-    def patched(app_name="profile"):  # noqa: ANN001
-        from pyspark.sql import SparkSession
-
-        cpus = sess.default_parallelism()
-        b = (
-            SparkSession.builder.appName(app_name)
-            .master(f"local[{cpus}]")
-            .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-            .config("spark.sql.parquet.filterPushdown", "true")
-            .config("spark.driver.memory", "31g")
-            .config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", f"file://{evdir}")
-            .config("spark.eventLog.compress", "false")
-            .config("spark.eventLog.rolling.enabled", "false")
-            .config("spark.ui.enabled", "false")
-            .config("spark.checkpoint.dir", sess._local_checkpoint_dir().name)
-            .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        )
-        spark = b.getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-        return spark
-
-    sess.get_spark = patched
+    # Event-log settings must reach the JVM before it starts: pass them
+    # as spark-submit arguments, then build the session through get_spark
+    # so every engine default applies unchanged.
+    evlog = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file://{evdir}",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {k}={v}" for k, v in evlog.items()]
+        + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")]
+    )
     import __spark_entry__ as entrymod
+    from genai_batch_processor_spark.session import get_spark
 
     qs = entrymod.queries()
     unknown = [n for n in names if n not in qs]
@@ -91,7 +70,7 @@ def main() -> None:
             f"unknown queries {unknown}; registry has {len(qs)} names "
             "(see QUERIES.md)"
         )
-    spark = patched("profile")
+    spark = get_spark("profile")
     # warm exactly like bench.py
     qs[list(qs)[0] if "joinback" not in qs else "joinback"](spark, sf_dir).count()
 
