@@ -308,6 +308,24 @@ def band_key_at(sig: Column, band: Column, rows: int = LSH_ROWS) -> Column:
     )
 
 
+def _array_pairs(name: str, pair_fn) -> Column:
+    """``pair_fn(x, y)`` for every element ``x`` of array column
+    ``name`` and every ``y`` after it — all unordered pairs, each once;
+    over a sorted array ``x`` precedes ``y``, which makes ``id_a <
+    id_b`` structural. A column, not an expression: an inline array
+    would be re-evaluated per element (no CSE inside higher-order
+    lambdas)."""
+    arr = F.col(name)
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)), lambda y: pair_fn(x, y)
+            ),
+        )
+    )
+
+
 def _pairs_within_buckets(
     buckets: DataFrame, group_cols: list[str], max_bucket: int
 ) -> DataFrame:
@@ -323,14 +341,8 @@ def _pairs_within_buckets(
         .agg(F.sort_array(F.collect_list("__id")).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pairs = _array_pairs(
+        "ids", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     return (
         grouped.select(F.explode(pairs).alias("p"))
@@ -490,15 +502,7 @@ def _banded_rec_pairs(sigs: DataFrame, pair_fn, max_bucket: int) -> DataFrame:
         .agg(F.sort_array(F.collect_list("__rec")).alias("recs"))
         .filter((F.size("recs") >= 2) & (F.size("recs") <= max_bucket))
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("recs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("recs"), i + 2, F.size(F.col("recs"))),
-                lambda y: pair_fn(x, y),
-            ),
-        )
-    )
+    pairs = _array_pairs("recs", pair_fn)
     return grouped.select(F.explode(pairs).alias("p"))
 
 
@@ -666,103 +670,102 @@ def incremental_near_dup_pairs(
     text is never touched. Bucket-size caps apply to the COMBINED
     (index + batch) bucket, so results match a from-scratch run over
     the union restricted to new-sided pairs (the oracle replays exactly
-    that; the equivalence is property-tested for arbitrary splits).
+    that; the equivalence is property-tested for arbitrary splits,
+    with and without cap pressure).
 
-    Probe plan — THE INDEX NEVER SHUFFLES: the new batch's band rows
-    (small by definition) broadcast against a single scan of the
-    index; the combined cap uses the index's build-time ``bucket_n``
-    plus the batch's own bucket counts, so no probe-time aggregation
-    touches the index either. New-new pairs within the batch come from
-    the batch-local grouped path, capped by the same combined size.
-    Pair ids are normalized (id_a < id_b) across the id spaces; a
-    batch id that already exists in the index (a replay) matches only
-    OTHER docs — the probe-join self-match is filtered, preserving the
-    strict ordering the from-scratch path guarantees structurally.
+    Probe plan — ONE grouping by (band, key), and THE INDEX NEVER
+    SHUFFLES: the batch's (band, key) rows broadcast into a left-semi
+    join over a single scan of the index, so only the index rows that
+    share a batch key leave the scan. Those rows and the batch rows
+    group on (band, key); each group emits its old-new and new-new
+    pairs, which are deduped and thresholded once. Cap rule, for a
+    group with ``n`` batch rows: an old-new pair is kept when that old
+    row's build-time ``bucket_n`` plus ``n`` is ≤ ``max_bucket``;
+    new-new pairs are kept when ``n`` plus the group's MINIMUM old
+    ``bucket_n`` (0 when the key has no old row) is ≤ ``max_bucket`` —
+    the probe view may union sources with their own counts (the
+    streaming drain adds earlier epochs' rows to the corpus index), and
+    a new-new pair stands when any source's combined bucket admits it.
+    An old row already at or over the cap can pair with nothing, so it
+    adds only to the group's minimum, never its ``hs`` payload: a
+    degenerate corpus bucket ships no payload through the shuffle.
+    Pair ids are normalized (id_a < id_b) across the id spaces; a batch
+    id that already exists in the index (a replay) matches only OTHER
+    docs — the self-match is filtered, preserving the strict ordering
+    the from-scratch path guarantees structurally.
 
-    The batch's band relation is referenced by both probe paths, so it
-    must be materialized once: pass ``batch_index`` (a prebuilt,
-    caller-persisted ``minhash_index(new_docs)``) when the caller
-    manages lifecycles — e.g. a streaming ingest loop that writes the
-    batch index beside the pairs and unpersists it after — else the
-    function materializes one internally per call with an eager
-    checkpoint (bounded by the batch size; no session cache entry
-    outlives the call's references, as in the embedding twin
-    ``similarity.incremental_embedding_pairs``). Pass a PERSISTED or
-    store-loaded index for the corpus side too — a live unpersisted
-    ``minhash_index(corpus)`` plan re-shingles the corpus once per
-    reference."""
+    The batch's band relation is read twice (its broadcast keys and its
+    grouped rows), so it must be materialized once: pass
+    ``batch_index`` (a prebuilt ``minhash_index(new_docs)``, persisted
+    or read back from files) when the caller manages lifecycles — e.g.
+    the streaming drain, which writes the batch rows first and probes
+    the directory it wrote — else the function materializes one
+    internally per call with an eager checkpoint (bounded by the batch
+    size; no session cache entry outlives the call's references, as in
+    the embedding twin ``similarity.incremental_embedding_pairs``).
+    Pass a PERSISTED or store-loaded index for the corpus side too — a
+    live unpersisted ``minhash_index(corpus)`` plan re-shingles the
+    corpus on every evaluation."""
     new_index = (
         batch_index
         if batch_index is not None
         else minhash_index(new_docs, id_col, text_col).checkpoint(eager=True)
     )
-
-    # -- old-new: broadcast the batch into one index scan --------------
-    new_side = F.broadcast(
-        new_index.select(
-            "band",
-            "key",
-            F.col("id").alias("new_id"),
-            F.col("hs").alias("new_hs"),
-            F.col("bucket_n").alias("new_n"),
-        )
+    old_rows = index.join(
+        F.broadcast(new_index.select("band", "key")),
+        ["band", "key"],
+        "left_semi",
+    ).select(
+        "band",
+        "key",
+        F.col("bucket_n").alias("old_n"),
+        F.when(
+            F.col("bucket_n") < max_bucket, F.struct("id", "hs", "bucket_n")
+        ).alias("old"),
     )
-    old_new = (
-        index.join(new_side, ["band", "key"])
-        .filter(F.col("bucket_n") + F.col("new_n") <= max_bucket)
-        .filter(F.col("id") != F.col("new_id"))  # replayed-id self-match
-        .select(
-            F.least(F.col("id"), F.col("new_id")).alias("id_a"),
-            F.greatest(F.col("id"), F.col("new_id")).alias("id_b"),
-            F.round(
-                jaccard(F.col("hs"), F.col("new_hs")), 6
-            ).alias("jaccard"),
-        )
-    )
-
-    # -- new-new: batch-local buckets, capped by the COMBINED size -----
-    # (old count for the batch's keys rides in from a semi-aggregated
-    # slice of the probe join's own inputs: keys absent → 0)
-    old_sizes = (
-        index.join(
-            F.broadcast(new_index.select("band", "key").distinct()),
-            ["band", "key"],
-            "left_semi",
-        )
-        .select("band", "key", "bucket_n")
-        .distinct()
-        .withColumnRenamed("bucket_n", "old_n")
-    )
-    rec = F.struct(F.col("id"), F.col("hs"))
+    new_rows = new_index.select("band", "key", F.struct("id", "hs").alias("new"))
     grouped = (
-        new_index.groupBy("band", "key")
-        .agg(F.sort_array(F.collect_list(rec)).alias("recs"))
-        .join(F.broadcast(old_sizes), ["band", "key"], "left")
-        .withColumn("old_n", F.coalesce(F.col("old_n"), F.lit(0)))
-        .filter(
-            (F.size("recs") >= 2)
-            & (F.size("recs") + F.col("old_n") <= max_bucket)
+        old_rows.unionByName(new_rows, allowMissingColumns=True)
+        .groupBy("band", "key")
+        .agg(
+            F.sort_array(F.collect_list("new")).alias("new"),
+            F.collect_list("old").alias("old"),  # skips over-cap nulls
+            F.coalesce(F.min("old_n"), F.lit(0)).alias("min_old"),
         )
     )
-    pairs = F.flatten(
+    n_new = F.size("new")
+
+    def pair(a: Column, b: Column) -> Column:
+        return F.struct(
+            F.least(a["id"], b["id"]).alias("id_a"),
+            F.greatest(a["id"], b["id"]).alias("id_b"),
+            F.round(jaccard(a["hs"], b["hs"]), 6).alias("jaccard"),
+        )
+
+    capped = grouped.select(
+        "new",
+        F.filter("old", lambda o: o["bucket_n"] + n_new <= max_bucket).alias(
+            "old"
+        ),
+        # all of the group's new rows, or none, under the new-new cap
+        F.filter("new", lambda _: n_new + F.col("min_old") <= max_bucket).alias(
+            "new_ok"
+        ),
+    )
+    old_new = F.flatten(
         F.transform(
-            F.col("recs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("recs"), i + 2, F.size(F.col("recs"))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.round(jaccard(x["hs"], y["hs"]), 6).alias("jaccard"),
-                ),
+            "old",
+            lambda o: F.transform(
+                # a replayed batch id never pairs with its own old row
+                F.filter("new", lambda n: n["id"] != o["id"]),
+                lambda n: pair(o, n),
             ),
         )
     )
-    new_new = grouped.select(F.explode(pairs).alias("p")).select(
-        "p.id_a", "p.id_b", "p.jaccard"
-    )
-
+    new_new = _array_pairs("new_ok", pair)
     return (
-        old_new.unionByName(new_new)
+        capped.select(F.explode(F.concat(old_new, new_new)).alias("p"))
+        .select("p.id_a", "p.id_b", "p.jaccard")
         .distinct()
         .filter(F.col("jaccard") >= threshold)
     )
@@ -833,14 +836,8 @@ def winnow_pairs(
         .agg(F.sort_array(F.collect_list("__id")).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pairs = _array_pairs(
+        "ids", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     return (
         grouped.select(F.explode(pairs).alias("p"))
@@ -1310,18 +1307,13 @@ def simhash_near_dup_pairs(
         .agg(F.sort_array(F.collect_list("__rec")).alias("recs"))
         .filter((F.size("recs") >= 2) & (F.size("recs") <= max_bucket))
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("recs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("recs"), i + 2, F.size(F.col("recs"))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
-                ),
-            ),
-        )
+    pairs = _array_pairs(
+        "recs",
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
+        ),
     )
     return (
         grouped.select(F.explode(pairs).alias("p"))

@@ -550,10 +550,12 @@ def incremental_embedding_pairs(
     new-sided pairs — the DuckDB twin replays exactly that.
 
     Plan shape: the batch is assigned cells shuffle-free with the SAME
-    centroids the index was built with, its per-cell counts (≤ k rows)
-    and the batch itself are broadcast into ONE scan of the index
-    (which is never shuffled), and the new-new side is a self-join of
-    the (small) batch. Output: (id_a, id_b, cosine) with id_a < id_b.
+    centroids the index was built with, the cells under the combined
+    cap (≤ k rows) and the batch itself are broadcast into ONE scan of
+    the index (which is never shuffled; the per-cell counts meet in a
+    ≤ k-row full outer join, which Spark cannot broadcast), and the
+    new-new side is a self-join of the (small) batch. Output: (id_a,
+    id_b, cosine) with id_a < id_b.
     A replayed id (same id in index AND batch) matches only OTHER
     vectors — the probe-join self-match is filtered, mirroring
     dedup.incremental_near_dup_pairs.
@@ -610,7 +612,7 @@ def incremental_embedding_pairs(
         F.count(F.lit(1)).alias("old_n")
     )
     ok_cells = (
-        old_counts.join(F.broadcast(batch_counts), "cell", "full")
+        old_counts.join(batch_counts, "cell", "full")
         .withColumn(
             "__tot",
             F.coalesce(F.col("old_n"), F.lit(0))

@@ -22,7 +22,7 @@ from __future__ import annotations
 import contextlib
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import ids
@@ -179,16 +179,27 @@ def _drain_epoch_sink(
     """The epoch-sink protocol the three sink-based probe streams share.
     ``roots`` names the rows root (the batch's own index rows, the
     scheme ``marker`` and the epoch ledger live there) and the report
-    root under ``out_dir``. Every non-empty micro-batch overwrites
-    ``{report root}/batch={epoch}`` with ``report(probe, batch_df,
-    rows)`` and then ``{rows root}/batch={epoch}`` with ``rows =
-    batch_rows(batch_df)``, so a replayed epoch rewrites the same two
-    directories with the same content. ``batch_rows`` persists its
-    relation when ``report`` reads it too; it is unpersisted after both
-    writes. The probe is ``index``, unioned — when ``extend`` — with
-    the rows root's sunk epochs strictly before this one, so
-    cross-micro-batch pairs are found exactly once, when the later side
-    arrives.
+    root under ``out_dir``. Every micro-batch first overwrites ``{rows
+    root}/batch={epoch}`` with ``batch_rows(batch_df)``, then reads
+    that directory back — a plain parquet leaf under the rows' own
+    schema, so nothing is persisted or released — as the ``rows`` of
+    ``report(probe, batch_df, rows)``, which overwrites ``{report
+    root}/batch={epoch}``. The row count observed on the rows write
+    says whether the epoch is empty (each ``batch_rows`` emits at least
+    one row per batch record); an empty epoch leaves its committed,
+    empty rows directory and no report. The probe
+    is ``index``, unioned — when ``extend`` — with the rows root's sunk
+    epochs strictly before this one (read under the same schema, no
+    inference), so cross-micro-batch pairs are found exactly once, when
+    the later side arrives.
+
+    A replayed epoch rewrites the same two directories with the same
+    content, including after a crash between the two writes (rows
+    written, report not): the rerun's probe view lists only epochs
+    strictly before the replayed one, so the leftover rows directory is
+    never probed as an earlier epoch, and maintenance never folds it
+    while it is the newest epoch (``keep_last`` ≥ 1) or while the
+    crashed drain's lease stands.
 
     Drain lease on BOTH sink roots for the whole drain: the
     uncommitted-epoch tripwire only covers the write window, but the
@@ -210,22 +221,24 @@ def _drain_epoch_sink(
     ledger = _EpochLedger(spark, rows_root) if extend else None
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        probe = index
         earlier = ledger.earlier(epoch_id) if ledger else []
-        if earlier:
-            probe = probe.unionByName(spark.read.parquet(*earlier))
-        rows = batch_rows(batch_df)
-        try:
-            report(probe, batch_df, rows).write.mode("overwrite").parquet(
+        rows_dir = compaction.epoch_dir(rows_root, epoch_id)
+        # observed on top of the rows, not on batch_df: AQE replaces an
+        # empty shuffle stage by an empty relation, and an observation
+        # inside that stage then reports no metrics at all
+        seen = Observation()
+        rows = batch_rows(batch_df).observe(seen, F.count(F.lit(1)).alias("n"))
+        rows.write.mode("overwrite").parquet(rows_dir)
+        if seen.get["n"]:
+            probe = index
+            if earlier:
+                probe = probe.unionByName(
+                    spark.read.schema(rows.schema).parquet(*earlier)
+                )
+            written = spark.read.schema(rows.schema).parquet(rows_dir)
+            report(probe, batch_df, written).write.mode("overwrite").parquet(
                 compaction.epoch_dir(report_root, epoch_id)
             )
-            rows.write.mode("overwrite").parquet(
-                compaction.epoch_dir(rows_root, epoch_id)
-            )
-        finally:
-            rows.unpersist()
         if ledger:
             ledger.record(epoch_id)
 
@@ -322,7 +335,7 @@ def near_dup_probe_stream_to_parquet(
         "started; start a fresh out_dir/checkpoint and re-probe.",
         batch_rows=lambda batch: dedup.minhash_index(
             batch, id_col, text_col, fanout=False
-        ).persist(),
+        ),
         report=lambda probe, batch, rows: dedup.incremental_near_dup_pairs(
             probe, batch, id_col, text_col, batch_index=rows
         ),
@@ -383,7 +396,7 @@ def embedding_probe_stream_to_parquet(
         "out_dir/checkpoint and re-probe.",
         batch_rows=lambda batch: similarity.embedding_cell_index(
             batch, centroids, assigner=assigner
-        ).persist(),
+        ),
         report=lambda probe, batch, rows: (
             similarity.incremental_embedding_pairs(
                 probe, batch, centroids, max_cell=max_cell, batch_index=rows

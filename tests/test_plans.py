@@ -64,17 +64,6 @@ def _embedding_probe_of_operators(spark, sf_dir):
     )
 
 
-def _incremental_probe_of_operators(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    batch = docs.filter(F.col("doc_id") % 10 == 3).select(
-        (F.col("doc_id") + queries.INC_DEDUP_OFFSET).alias("doc_id"),
-        "text",
-    )
-    return dedup.incremental_near_dup_pairs(
-        dedup.minhash_index(docs, "doc_id", "text"), batch, "doc_id", "text"
-    )
-
-
 # Queries that serve a shared stage return its checkpoint leaf, whose
 # plan shows none of the operators these tests pin; their plan is read
 # from the operators the stage is built from (the queries.py builds).
@@ -85,7 +74,6 @@ STAGE_OPERATORS = {
     "simhash_near_dup": _simhash_pairs,
     "rrf_fusion": _rrf_of_operators,
     "incremental_embedding_near_dup": _embedding_probe_of_operators,
-    "incremental_near_dup": _incremental_probe_of_operators,
     "part_match_candidates": lambda spark, sf_dir: linkage.blocked_pairs(
         queries._parts_with_bands(spark, sf_dir),
         "p_partkey",
@@ -878,12 +866,56 @@ def test_event_key_skew_single_corpus_aggregate(spark, sf_dir):
     assert "PythonUDF" not in plan
 
 
-def test_incremental_probe_broadcasts_the_batch(spark, sf_dir):
-    """The index-probe join must broadcast the (small) new batch —
-    never cartesian, and the probe side rides BroadcastHashJoins."""
-    plan = _plan(spark, "incremental_near_dup", sf_dir)
-    assert "Cartesian" not in plan
-    assert plan.count("BroadcastExchange") >= 2  # new side + old_sizes
+def _ancestors(plan, node_id):
+    """Operator names above node ``node_id`` in a formatted plan's
+    tree, nearest first (a parent is the nearest earlier line indented
+    less than its child)."""
+    tree = plan.split("\n\n")[0].splitlines()[1:]
+    rows = [(len(l) - len(l.lstrip(" +-:")), l.lstrip(" +-:")) for l in tree]
+    at = next(i for i, (_, n) in enumerate(rows) if n.endswith(f"({node_id})"))
+    out, depth = [], rows[at][0]
+    for d, name in reversed(rows[:at]):
+        if d < depth:
+            out.append(name)
+            depth = d
+    return out
+
+
+def test_incremental_probe_broadcasts_the_batch(spark, sf_dir, tmp_path):
+    """The probe over a store-loaded index: ONE BroadcastExchange (the
+    batch's band keys) into a LeftSemi join over the index scan, so the
+    index never shuffles — the first operator above its scan that is
+    not a row-local Filter/Project is that join, never an Exchange —
+    and no cartesian or sort-merge join anywhere."""
+    from genai_batch_processor_spark.sources import index_store
+
+    docs = _docs(spark, sf_dir)
+    path = str(tmp_path / "band_index")
+    index_store.save_minhash_index(
+        dedup.minhash_index(docs, "doc_id", "text"), path
+    )
+    batch = docs.filter(F.col("doc_id") % 10 == 3).select(
+        (F.col("doc_id") + queries.INC_DEDUP_OFFSET).alias("doc_id"), "text"
+    )
+    df = dedup.incremental_near_dup_pairs(
+        index_store.load_minhash_index(spark, path), batch, "doc_id", "text"
+    )
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "Cartesian" not in plan and "SortMergeJoin" not in plan
+    assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 1
+    scans = re.findall(
+        r"\((\d+)\) Scan parquet[^\n]*\n(?:[^\n]+\n)*?Location: [^\n]*band_index",
+        plan,
+    )
+    assert len(scans) == 1, "the index must be scanned once"
+    above = [
+        n
+        for n in _ancestors(plan, scans[0])
+        if not n.startswith(("Filter", "Project", "ColumnarToRow"))
+    ]
+    assert above[0].startswith("BroadcastHashJoin LeftSemi"), above
 
 
 def test_embedding_probe_broadcasts_batch_index_unshuffled(spark, sf_dir):

@@ -303,6 +303,88 @@ def test_incremental_probe_matches_from_scratch(spark, old, new):
     assert inc == scratch
 
 
+# each planted text goes into the old corpus and the new batch a chosen
+# number of times, so identical copies share every band bucket and the
+# combined bucket size (old copies + new copies) crosses small caps
+_planted = st.lists(
+    st.tuples(_doc, st.integers(0, 3), st.integers(0, 3)),
+    min_size=1,
+    max_size=6,
+)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(planted=_planted, max_bucket=st.sampled_from([2, 3, 4]))
+def test_incremental_probe_matches_from_scratch_under_cap_pressure(
+    spark, planted, max_bucket
+):
+    """The variant of the property above whose caps DO fire: repeated
+    copies fill buckets past ``max_bucket`` in {2, 3, 4}. The probe's
+    combined-bucket cap (old ``bucket_n`` + batch count, per pair side)
+    must drop exactly the pairs a from-scratch run over the union
+    drops, restricted to new-sided pairs."""
+    offset = 1000
+    old = [t for t, n_old, _ in planted for _ in range(n_old)]
+    new = [t for t, _, n_new in planted for _ in range(n_new)]
+    old_df = spark.createDataFrame(
+        list(enumerate(old)), "doc_id long, text string"
+    )
+    new_df = spark.createDataFrame(
+        [(offset + i, t) for i, t in enumerate(new)],
+        "doc_id long, text string",
+    )
+    index = dedup.minhash_index(old_df, "doc_id", "text")
+    inc = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in dedup.incremental_near_dup_pairs(
+            index, new_df, "doc_id", "text", max_bucket=max_bucket
+        ).collect()
+    }
+    scratch = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in dedup.near_dup_pairs(
+            old_df.unionByName(new_df),
+            "doc_id",
+            "text",
+            max_bucket=max_bucket,
+        ).collect()
+        if r.id_b >= offset
+    }
+    assert inc == scratch
+
+
+def test_incremental_probe_caps_across_index_sources(spark):
+    """A probe view that unions two sources — as the streaming drain
+    unions the corpus index with an earlier epoch's rows — holds one
+    key under two build-time counts (3 and 1 here). With a batch of 2
+    and ``max_bucket=3``: old-new pairs are capped per old row (only
+    the count-1 row pairs), and new-new pairs stand because the
+    SMALLEST old count fits (2 + 1 <= 3)."""
+    text = "alpha beta gamma delta epsilon"
+    schema = "doc_id long, text string"
+
+    def index_of(ids):
+        return dedup.minhash_index(
+            spark.createDataFrame([(i, text) for i in ids], schema),
+            "doc_id",
+            "text",
+        )
+
+    index = index_of([0, 1, 2]).unionByName(index_of([10]))
+    new_df = spark.createDataFrame([(1000, text), (1001, text)], schema)
+    got = {
+        (r.id_a, r.id_b)
+        for r in dedup.incremental_near_dup_pairs(
+            index, new_df, "doc_id", "text", max_bucket=3
+        ).collect()
+    }
+    assert got == {(10, 1000), (10, 1001), (1000, 1001)}
+
+
 # -- blocked linkage == brute force within blocks ----------------------------
 
 _name = st.lists(

@@ -500,6 +500,159 @@ def test_sink_probe_restart_across_checkpoint(spark, tmp_path):
         index.unpersist()
 
 
+def test_sink_probe_replays_over_leftover_rows(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash between an epoch's rows write and its report write
+    leaves a committed ``index/batch=N`` and no ``pairs/batch=N``. The
+    leftover is made stale here (shifted-id copies of the batch's band
+    rows appended to it), then: it is not compacted while it is the
+    newest epoch (``keep_last``), the rerun's probe view reads no file
+    of it, and the rerun's pairs equal the one-shot probe's, with the
+    leftover replaced by the epoch's own rows."""
+    import pytest
+
+    from genai_batch_processor_spark.operators import dedup
+    from genai_batch_processor_spark.queries import INC_DEDUP_OFFSET
+    from genai_batch_processor_spark.sources import compaction
+    from genai_batch_processor_spark.streaming import ingest
+
+    docs = load_table(spark, sf_dir, "documents")
+    index = dedup.minhash_index(docs, "doc_id", "text").persist()
+    new_docs = docs.filter(F.col("doc_id") % 10 == 3).select(
+        (F.col("doc_id") + INC_DEDUP_OFFSET).alias("doc_id"), "text"
+    )
+    wave1 = new_docs.filter(F.col("doc_id") % 20 == 3)
+    wave2 = new_docs.filter(F.col("doc_id") % 20 == 13)
+    shards = str(tmp_path / "shards")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    index_root = os.path.join(out, "index")
+    leftover = os.path.join(index_root, "batch=1")
+
+    def drain():
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(shards)
+        )
+        ingest.near_dup_probe_stream_to_parquet(
+            stream, index, "doc_id", "text", out, ckpt
+        )
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("killed before the report write")
+
+    probe_pairs = dedup.incremental_near_dup_pairs
+    probed = []
+
+    def spy(probe, *args, **kwargs):
+        probed.extend(probe.inputFiles())
+        return probe_pairs(probe, *args, **kwargs)
+
+    try:
+        wave1.coalesce(1).write.mode("append").parquet(shards)
+        drain()  # epoch 0
+        wave2.coalesce(1).write.mode("append").parquet(shards)
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "incremental_near_dup_pairs", crash)
+            with pytest.raises(Exception, match="killed before the report"):
+                drain()  # epoch 1: rows written, report not
+        assert os.path.isfile(os.path.join(leftover, "_SUCCESS"))
+        assert not os.path.exists(os.path.join(out, "pairs", "batch=1"))
+        dedup.minhash_index(
+            wave2.withColumn("doc_id", F.col("doc_id") + INC_DEDUP_OFFSET),
+            "doc_id",
+            "text",
+        ).write.mode("append").parquet(leftover)
+
+        assert compaction.compact_epoch_sink(spark, index_root) == 0
+        assert compaction.epoch_sink_paths(spark, index_root, before=1) == [
+            f"file:{index_root}/_compacted/upto=0"
+        ]
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "incremental_near_dup_pairs", spy)
+            drain()  # replays epoch 1
+        assert any("/_compacted/upto=0/" in f for f in probed)
+        assert not any("/batch=1/" in f for f in probed), probed
+        got = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in spark.read.parquet(os.path.join(out, "pairs")).collect()
+        }
+        want = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.incremental_near_dup_pairs(
+                index, new_docs, "doc_id", "text"
+            ).collect()
+        }
+        assert got == want and len(want) > 0
+        rewritten = {r.id for r in spark.read.parquet(leftover).collect()}
+        assert rewritten == {r.doc_id for r in wave2.collect()}
+    finally:
+        index.unpersist()
+
+
+def test_sink_probe_empty_epoch_keeps_sink_invariants(spark, sf_dir, tmp_path):
+    """An epoch over an empty shard writes a committed rows directory
+    holding no rows and no report. The next epoch probes it (the
+    ledger stays the set of earlier epochs), a restart writes nothing,
+    compaction folds it, and the pairs equal the one-shot probe's."""
+    from genai_batch_processor_spark.operators import dedup
+    from genai_batch_processor_spark.queries import INC_DEDUP_OFFSET
+    from genai_batch_processor_spark.sources import compaction
+    from genai_batch_processor_spark.streaming import ingest
+
+    docs = load_table(spark, sf_dir, "documents")
+    index = dedup.minhash_index(docs, "doc_id", "text").persist()
+    new_docs = docs.filter(F.col("doc_id") % 10 == 3).select(
+        (F.col("doc_id") + INC_DEDUP_OFFSET).alias("doc_id"), "text"
+    )
+    shards = str(tmp_path / "shards")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    index_root = os.path.join(out, "index")
+
+    def drain():
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(shards)
+        )
+        ingest.near_dup_probe_stream_to_parquet(
+            stream, index, "doc_id", "text", out, ckpt
+        )
+
+    try:
+        new_docs.limit(0).coalesce(1).write.mode("append").parquet(shards)
+        new_docs.coalesce(1).write.mode("append").parquet(shards)
+        drain()  # epoch 0 empty, epoch 1 the batch
+        assert os.path.isfile(os.path.join(index_root, "batch=0", "_SUCCESS"))
+        assert spark.read.parquet(os.path.join(index_root, "batch=0")).count() == 0
+        assert sorted(os.listdir(os.path.join(out, "pairs"))) == ["batch=1"]
+        before = sorted(os.listdir(index_root))
+        drain()  # nothing new
+        assert sorted(os.listdir(index_root)) == before
+        assert compaction.compact_epoch_sink(spark, index_root) == 0
+        got = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in compaction.read_epoch_sink(
+                spark, os.path.join(out, "pairs")
+            ).collect()
+        }
+        want = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.incremental_near_dup_pairs(
+                index, new_docs, "doc_id", "text"
+            ).collect()
+        }
+        assert got == want and len(want) > 0
+        assert compaction.read_epoch_sink(spark, index_root).count() == (
+            new_docs.count() * dedup.LSH_BANDS
+        )
+    finally:
+        index.unpersist()
+
+
 def test_embedding_sink_probe_restart_across_checkpoint(spark, tmp_path):
     """ANN-ingest twin of the sink-probe restart test: drain wave 1 of
     a vector re-ingest, restart the SAME checkpoint over wave 1 +
@@ -703,8 +856,10 @@ def test_probe_drain_job_ceilings(spark, tmp_path):
     under a Spark job ceiling: the jobs run from the caller's job group
     (scheme fingerprint, marker) plus the jobs its stream runs (in the
     job group named by the query's run id). The ceilings are the counts
-    the three drains ran before they shared one epoch-sink driver;
-    cutting the per-epoch fixed cost lowers them."""
+    the drains run since each epoch writes its batch rows once and
+    reads them back, and the band probe is one (band, key) grouping
+    (they were 28, 43 and 16 before); cutting the per-epoch fixed cost
+    further lowers them."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     from genai_batch_processor_spark.operators import (
@@ -755,7 +910,7 @@ def test_probe_drain_job_ceilings(spark, tmp_path):
             lambda s, o, c: ingest.near_dup_probe_stream_to_parquet(
                 s, band, "doc_id", "text", o, c
             ),
-            28,
+            14,
         ),
         (
             "embedding",
@@ -765,7 +920,7 @@ def test_probe_drain_job_ceilings(spark, tmp_path):
             lambda s, o, c: ingest.embedding_probe_stream_to_parquet(
                 s, cell, cents, o, c
             ),
-            43,
+            29,
         ),
         (
             "span",
@@ -775,7 +930,7 @@ def test_probe_drain_job_ceilings(spark, tmp_path):
             lambda s, o, c: ingest.span_probe_stream_to_parquet(
                 s, span, o, c
             ),
-            16,
+            14,
         ),
     ]
     sc = spark.sparkContext
