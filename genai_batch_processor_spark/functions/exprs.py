@@ -7,12 +7,27 @@ Any O(n) expression consumed inside an O(n) lambda silently becomes
 O(n²) per row — measured 13-20× slowdowns on shingling and
 quantization before these call sites were bound (see
 operators/dedup.winnow_from_hashes for the war story).
+
+``once`` exists because building a Column from Python is not free: every
+``Column``/``functions`` call is one Py4J round trip (~0.05 ms), and the
+MinHash signature alone is ~1,500 of them. A hot path that rebuilds the
+same tree for every micro-batch pays that per epoch; ``once`` builds it
+once per process and JVM.
 """
 
 from __future__ import annotations
 
+from typing import Callable, Hashable, TypeVar
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
+
+# (gateway, {key: value}): the trees hold JVM object references, so
+# they are only valid for the gateway (JVM) that built them.
+_memo: tuple[object, dict] = (None, {})
 
 
 def bind(value: Column, body) -> Column:
@@ -21,3 +36,26 @@ def bind(value: Column, body) -> Column:
     transform over a 1-element array — the standard workaround for the
     missing lambda-interior CSE."""
     return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def once(key: tuple[Hashable, ...], build: Callable[[], T]) -> T:
+    """``build()``, memoized per process and live Py4J gateway.
+
+    ``key`` must name everything the value depends on (column names,
+    constants such as ``max_bucket``), and ``build`` must depend on
+    nothing else: the value is shared by every later caller, across
+    sessions on the same JVM. A new gateway (a new JVM) starts an empty
+    memo. Safe across threads — a ``foreachBatch`` callback and the
+    driver may call it at once; at worst both build the same value and
+    one wins. Column trees are immutable and may appear any number of
+    times in one plan (lambda variables are resolved per use)."""
+    global _memo
+    gateway = SparkContext._gateway
+    owner, memo = _memo
+    if owner is not gateway:
+        memo = {}
+        _memo = (gateway, memo)
+    try:
+        return memo[key]
+    except KeyError:
+        return memo.setdefault(key, build())

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import hashing, scaling, text as tx
+from genai_batch_processor_spark.functions.exprs import once
 from genai_batch_processor_spark.functions.fanout import fan_out
 
 SHINGLE_N = 3
@@ -611,29 +612,40 @@ def minhash_index(
         if fanout
         else df.select(id_col, text_col)
     )
-    hashed = base_in.select(
-        F.col(id_col).alias("__id"), shingle_hashes(text_col).alias("__hs")
-    )
-    sigs = hashed.select(
-        F.struct(
-            F.col("__id").alias("id"), F.col("__hs").alias("hs")
-        ).alias("__rec"),
-        minhash_signature(F.col("__hs")).alias("__sig"),
-    )
-    base = (
-        sigs.select("__rec", "__sig", _band_index(LSH_BANDS).alias("band"))
-        .select(
-            "band",
-            band_key_at(F.col("__sig"), F.col("band")).alias("key"),
-            F.col("__rec.id").alias("id"),
-            F.col("__rec.hs").alias("hs"),
-        )
-    )
+    hashed, sigs, bands, keyed = _minhash_index_exprs(id_col, text_col)
     # window count, not groupBy+join-back: the join would evaluate the
     # md5-heavy base pipeline twice (once for the sizes aggregate, once
     # for the join's left side); the window shuffles once on (band,key)
     # and counts in place.
-    return with_bucket_counts(base)
+    return with_bucket_counts(
+        base_in.select(*hashed).select(*sigs).select(*bands).select(*keyed)
+    )
+
+
+def _minhash_index_exprs(id_col: str, text_col: str):
+    """:func:`minhash_index`'s four column lists (shingle hashes, the
+    signature, the band explode, the band key), built once per
+    process (:func:`exprs.once`)."""
+
+    def build():
+        return (
+            [F.col(id_col).alias("__id"), shingle_hashes(text_col).alias("__hs")],
+            [
+                F.struct(
+                    F.col("__id").alias("id"), F.col("__hs").alias("hs")
+                ).alias("__rec"),
+                minhash_signature(F.col("__hs")).alias("__sig"),
+            ],
+            [F.col("__rec"), F.col("__sig"), _band_index(LSH_BANDS).alias("band")],
+            [
+                F.col("band"),
+                band_key_at(F.col("__sig"), F.col("band")).alias("key"),
+                F.col("__rec.id").alias("id"),
+                F.col("__rec.hs").alias("hs"),
+            ],
+        )
+
+    return once(("minhash_index", id_col, text_col), build)
 
 
 def with_bucket_counts(base: DataFrame) -> DataFrame:
@@ -645,14 +657,13 @@ def with_bucket_counts(base: DataFrame) -> DataFrame:
     ``bucket_n`` on surviving rows still counts the removed members,
     which over-applies the combined bucket cap at probe time — refresh
     and rewrite after erasures."""
-    from pyspark.sql.window import Window as _W
-
-    return base.drop("bucket_n").withColumn(
-        "bucket_n",
-        F.count(F.lit(1))
-        .over(_W.partitionBy("band", "key"))
+    bucket_n = once(
+        ("bucket_n",),
+        lambda: F.count(F.lit(1))
+        .over(Window.partitionBy("band", "key"))
         .cast("long"),
     )
+    return base.drop("bucket_n").withColumn("bucket_n", bucket_n)
 
 
 def incremental_near_dup_pairs(
@@ -711,64 +722,79 @@ def incremental_near_dup_pairs(
         if batch_index is not None
         else minhash_index(new_docs, id_col, text_col).checkpoint(eager=True)
     )
+    old_cols, new_cols, aggs, capped, pairs = _probe_exprs(max_bucket)
     old_rows = index.join(
         F.broadcast(new_index.select("band", "key")),
         ["band", "key"],
         "left_semi",
-    ).select(
-        "band",
-        "key",
-        F.col("bucket_n").alias("old_n"),
-        F.when(
-            F.col("bucket_n") < max_bucket, F.struct("id", "hs", "bucket_n")
-        ).alias("old"),
-    )
-    new_rows = new_index.select("band", "key", F.struct("id", "hs").alias("new"))
-    grouped = (
-        old_rows.unionByName(new_rows, allowMissingColumns=True)
-        .groupBy("band", "key")
-        .agg(
-            F.sort_array(F.collect_list("new")).alias("new"),
-            F.collect_list("old").alias("old"),  # skips over-cap nulls
-            F.coalesce(F.min("old_n"), F.lit(0)).alias("min_old"),
-        )
-    )
-    n_new = F.size("new")
-
-    def pair(a: Column, b: Column) -> Column:
-        return F.struct(
-            F.least(a["id"], b["id"]).alias("id_a"),
-            F.greatest(a["id"], b["id"]).alias("id_b"),
-            F.round(jaccard(a["hs"], b["hs"]), 6).alias("jaccard"),
-        )
-
-    capped = grouped.select(
-        "new",
-        F.filter("old", lambda o: o["bucket_n"] + n_new <= max_bucket).alias(
-            "old"
-        ),
-        # all of the group's new rows, or none, under the new-new cap
-        F.filter("new", lambda _: n_new + F.col("min_old") <= max_bucket).alias(
-            "new_ok"
-        ),
-    )
-    old_new = F.flatten(
-        F.transform(
-            "old",
-            lambda o: F.transform(
-                # a replayed batch id never pairs with its own old row
-                F.filter("new", lambda n: n["id"] != o["id"]),
-                lambda n: pair(o, n),
-            ),
-        )
-    )
-    new_new = _array_pairs("new_ok", pair)
+    ).select(*old_cols)
     return (
-        capped.select(F.explode(F.concat(old_new, new_new)).alias("p"))
+        old_rows.unionByName(new_index.select(*new_cols), allowMissingColumns=True)
+        .groupBy("band", "key")
+        .agg(*aggs)
+        .select(*capped)
+        .select(pairs)
         .select("p.id_a", "p.id_b", "p.jaccard")
         .distinct()
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def _probe_exprs(max_bucket: int):
+    """:func:`incremental_near_dup_pairs`'s column lists (the old and
+    new rows, the group aggregates, the cap filters, the pair explode),
+    built once per process and ``max_bucket`` (:func:`exprs.once`)."""
+
+    def build():
+        n_new = F.size("new")
+
+        def pair(a: Column, b: Column) -> Column:
+            return F.struct(
+                F.least(a["id"], b["id"]).alias("id_a"),
+                F.greatest(a["id"], b["id"]).alias("id_b"),
+                F.round(jaccard(a["hs"], b["hs"]), 6).alias("jaccard"),
+            )
+
+        old_new = F.flatten(
+            F.transform(
+                "old",
+                lambda o: F.transform(
+                    # a replayed batch id never pairs with its own old row
+                    F.filter("new", lambda n: n["id"] != o["id"]),
+                    lambda n: pair(o, n),
+                ),
+            )
+        )
+        return (
+            [
+                F.col("band"),
+                F.col("key"),
+                F.col("bucket_n").alias("old_n"),
+                F.when(
+                    F.col("bucket_n") < max_bucket,
+                    F.struct("id", "hs", "bucket_n"),
+                ).alias("old"),
+            ],
+            [F.col("band"), F.col("key"), F.struct("id", "hs").alias("new")],
+            [
+                F.sort_array(F.collect_list("new")).alias("new"),
+                F.collect_list("old").alias("old"),  # skips over-cap nulls
+                F.coalesce(F.min("old_n"), F.lit(0)).alias("min_old"),
+            ],
+            [
+                F.col("new"),
+                F.filter(
+                    "old", lambda o: o["bucket_n"] + n_new <= max_bucket
+                ).alias("old"),
+                # all of the group's new rows, or none, under the new-new cap
+                F.filter(
+                    "new", lambda _: n_new + F.col("min_old") <= max_bucket
+                ).alias("new_ok"),
+            ],
+            F.explode(F.concat(old_new, _array_pairs("new_ok", pair))).alias("p"),
+        )
+
+    return once(("incremental_near_dup_pairs", max_bucket), build)
 
 
 # -- near-dup clustering (components + survivors) ----------------------------
@@ -788,24 +814,6 @@ def winnow_from_hashes(hs: Column, w: int = WINNOW_W) -> Column:
     return F.array_distinct(
         F.transform(starts, lambda s: F.array_min(F.slice(hs, s, w)))
     )
-
-
-def winnow_fingerprints(
-    text: Column | str, k: int = WINNOW_K, w: int = WINNOW_W
-) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03): the ORDERED word k-gram hash sequence is scanned with a
-    width-``w`` window and each window contributes its minimum hash.
-    Guarantee: two documents sharing any run of ≥ k+w-1 identical words
-    share at least one fingerprint — so this catches copied PASSAGES
-    (containment), which whole-document MinHash similarity structurally
-    misses.
-
-    Convenience single-expression form for small relations and the
-    oracle twin; hot paths must stage the hash array and use
-    :func:`winnow_from_hashes` (see its scale note)."""
-    hs = F.transform(tx.shingles(text, k), hashing.portable_hash32)
-    return winnow_from_hashes(hs, w)
 
 
 def winnow_pairs(
@@ -938,6 +946,9 @@ def connected_components(
     take the union-find fast path (:func:`_components_driver`) instead
     of paying per-round scheduling overhead; pass 0 to force the
     distributed rounds (the property tests do, to keep proving them).
+    Every local checkpoint is freed as soon as nothing reads it: the
+    edges' and each superseded round's; only the last round's backs the
+    result (the driver path's result is driver-local rows).
     """
     base = pairs.select(
         F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v")
@@ -948,7 +959,9 @@ def connected_components(
     if driver_edge_bound:
         base = base.localCheckpoint(eager=True)
         if base.count() <= driver_edge_bound:
-            return _components_driver(base)
+            labels = _components_driver(base)  # driver-local rows
+            _drop_local_checkpoint(base)
+            return labels
         # over the bound: base is already materialized and the
         # symmetrizing union is a narrow recompute over it — a second
         # checkpoint would only add an eager job and ~double the
@@ -956,8 +969,9 @@ def connected_components(
         edges = base.unionAll(
             base.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
+        edge_leaf = base
     else:
-        edges = base.unionAll(
+        edges = edge_leaf = base.unionAll(
             base.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).localCheckpoint(eager=True)
     labels = (
@@ -992,6 +1006,7 @@ def connected_components(
             .filter(F.col("comp") != F.col("old"))
             .count()
         )
+        _drop_local_checkpoint(labels)  # superseded by ``new``
         labels = new
         if changed == 0:
             break
@@ -1008,9 +1023,17 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
+    _drop_local_checkpoint(edge_leaf)
     return labels.select(
         F.col("u").alias("doc_id"), F.col("comp").alias("component_id")
     )
+
+
+def _drop_local_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a ``localCheckpoint`` result nothing
+    reads any more; otherwise they stay in the block manager until a
+    driver GC lets the ContextCleaner find them."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def connected_components_star(

@@ -5,8 +5,8 @@ Replaces the reference's application-level index join
 lookup) and the fragile positional zip join
 (``run_text_classifier.py`` [vertex]``:149``) with an explicit equi-join.
 Order-dependence is gone by design (SURVEY.md §7 "known hard items") —
-ordering is explicit data (the id column), and the output sort (#35)
-reproduces the reference's key-ordered results.
+ordering is explicit data (the id column): sorting on it reproduces
+the reference's key-ordered results (#35).
 
 Scale: the input side of the join is usually the big one; responses join
 back on a unique key, so a plain shuffle hash join scales linearly. When
@@ -39,8 +39,3 @@ def attach_results(
     right = F.broadcast(resp) if broadcast_small else resp
     joined = inputs.join(right, inputs[id_col] == right["__join_idx"], how)
     return joined.drop("__join_idx")
-
-
-def ordered_by_key(df: DataFrame, custom_id_col: str = "custom_id") -> DataFrame:
-    """Key-ordered sort (#35): numeric ordinal parsed out of custom_id."""
-    return df.orderBy(ids.extract_index(custom_id_col))

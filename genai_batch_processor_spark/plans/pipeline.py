@@ -7,7 +7,7 @@ Lifecycle (reference entry point 1, SURVEY.md §3): build requests and
 prompt groups into ONE persisted planned relation → validate (limit(1)
 probe of its cached input columns) → sharded JSONL sink of the
 representatives → submit/poll via the orchestrator boundary → result
-scan → error split → join-back on the representative ordinal. Every
+scan → join-back on the representative ordinal → error split. Every
 stage except submit/poll is a distributed DataFrame job; nothing
 round-trips through driver memory (the reference materializes the whole
 input at ``oai:277`` and the whole output at ``oai:229``).
@@ -28,6 +28,9 @@ from genai_batch_processor_spark.functions import ids
 from genai_batch_processor_spark.inference import orchestrator
 from genai_batch_processor_spark.operators import batching, joinback, requests
 from genai_batch_processor_spark.sources import bigquery, jsonl, schemas
+
+# Error message of a planned row no parsed response line answers.
+MISSING_RESPONSE = "no parsable response line for this request"
 
 
 class BatchPipeline:
@@ -112,6 +115,24 @@ class BatchPipeline:
         """True for rows that belong in the error relation (#13/#38)."""
         return F.col("resp")["error"].isNotNull()
 
+    def _resp_struct(self, **fields: Column) -> Column:
+        """A response struct of the wire's schema: the given fields,
+        null elsewhere."""
+        return F.struct(
+            *[
+                fields.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in self._response_schema().fields
+            ]
+        )
+
+    def _missing_response(self) -> Column:
+        """The error a planned row gets when no parsed response line
+        answers it (corrupt, missing, or dropped by the provider)."""
+        return self._resp_struct(
+            custom_id=F.col("custom_id"),
+            error=F.struct(F.lit(MISSING_RESPONSE).alias("message")),
+        )
+
     def _resp_custom_id(self) -> Column:
         return F.col("resp.custom_id")
 
@@ -131,26 +152,26 @@ class BatchPipeline:
     def _assemble(
         self, planned: DataFrame, resp: DataFrame, rekey: bool
     ) -> tuple[DataFrame, DataFrame]:
-        """Shared lifecycle tail: error split → join-back. One code path
+        """Shared lifecycle tail: join-back → error split. One code path
         for empty and non-empty runs, so their schemas cannot diverge.
-        Results and errors each join the planned relation to the
-        response side (one row per submitted request; only there is its
-        custom_id parsed) on the representative ordinal, re-keying each
-        row's response to the row's own custom_id when ``rekey``."""
+        The planned relation LEFT-joins the response side (one row per
+        parsed response line; only there is its custom_id parsed) on
+        the representative ordinal, so every planned row comes out
+        exactly once: a row whose response line is corrupt or missing
+        gets :meth:`_missing_response` and lands in the errors. Each
+        row's response is re-keyed to the row's own custom_id when
+        ``rekey``."""
         planned = planned.withColumn("custom_id", F.col("request.custom_id"))
         own = [c for c in planned.columns if c != "rep_idx"]
-        cid, row_resp = F.col("custom_id"), F.col("resp")
+        row_resp = F.coalesce(F.col("resp"), self._missing_response())
         if rekey:
-            row_resp = self._rewrite_resp_custom_id(row_resp, cid)
-
-        def join_back(side: DataFrame, *cols: str) -> DataFrame:
-            return joinback.attach_results(
-                planned, side, id_col="rep_idx",
-                custom_id_col=self._resp_custom_id(), how="inner",
-            ).select(*cols, row_resp.alias("resp"))
-
+            row_resp = self._rewrite_resp_custom_id(row_resp, F.col("custom_id"))
+        rows = joinback.attach_results(
+            planned, resp, id_col="rep_idx",
+            custom_id_col=self._resp_custom_id(), how="left",
+        ).select(*own, row_resp.alias("resp"))
         err = self._resp_error()
-        return join_back(resp.filter(~err), *own), join_back(resp.filter(err))
+        return rows.filter(~err), rows.filter(err).select("resp")
 
     def run(
         self,
@@ -373,6 +394,16 @@ class VertexAIBatchPipeline(BatchPipeline):
 
     def _resp_error(self) -> Column:
         return F.col("resp")["response"]["error"].isNotNull()
+
+    def _missing_response(self) -> Column:
+        # the echoed keyed request carries the row's custom_id
+        return self._resp_struct(
+            request=F.to_json("request"),
+            response=F.struct(
+                F.lit(None).alias("candidates"),
+                F.struct(F.lit(MISSING_RESPONSE).alias("message")).alias("error"),
+            ),
+        )
 
     def _resp_custom_id(self) -> Column:
         # the echoed request string carries the passthrough key

@@ -155,39 +155,94 @@ def save_minhash_index(index: DataFrame, path: str) -> None:
     )
 
 
+# The at-rest layout ``save_minhash_index`` writes. Reading under it
+# skips schema inference (a Spark job); a column an older writer did
+# not write reads as null.
+_MINHASH_SCHEMA = (
+    "format_version int, scheme_fp string, key bigint, id bigint, "
+    "hs array<bigint>, bucket_n bigint, band int"
+)
+
+
+def _first_band(spark: SparkSession, path: str) -> int | None:
+    """The smallest ``band=N`` partition directory under ``path``, from
+    one directory listing (no Spark job); None when there is none."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    values = [
+        int(m.group(1))
+        for status in fs.listStatus(root)
+        if status.isDirectory()
+        and (m := re.fullmatch(r"band=(-?\d+)", status.getPath().getName()))
+    ]
+    return min(values, default=None)
+
+
 def load_minhash_index(
     spark: SparkSession, path: str, check_bucket_counts: bool = True
 ) -> DataFrame:
     """Reload a persisted MinHash band index with the same version
-    guard as the centroid store. The distinct runs BEFORE the limit so
-    a mixed-version directory (e.g. a partial overwrite leaving old
-    files beside new) cannot hide behind two same-version sample rows;
-    the scan reads one small column, not the payload.
+    guard as the centroid store. Every check is one collected
+    aggregate over the index (≤ 3 Spark jobs, no schema inference):
+    the set of format versions and the set of scheme fingerprints
+    cover EVERY row, so a mixed-version directory (e.g. a partial
+    overwrite leaving old files beside new) cannot hide behind
+    same-version samples; the scan reads small columns, not the
+    payload.
 
     ``check_bucket_counts`` is the staleness guard: after a takedown
     deletes rows, the denormalized ``bucket_n`` on surviving rows
     still counts the removed members and silently over-applies the
     probe-time bucket cap — :func:`operators.dedup.with_bucket_counts`
     is the documented repair, but docs don't stop an operator from
-    loading a stale index. The guard spot-checks ONE band (partition-
-    pruned, two small columns, no ``hs`` payload): recorded
+    loading a stale index. The guard spot-checks ONE band (the first
+    ``band=`` partition listed, no ``hs`` payload): recorded
     ``bucket_n`` vs actual per-key row count, and raises naming the
     repair. Every band gets the same delete (a doc's rows span all
     bands), so one band's counts witness the whole index."""
     from genai_batch_processor_spark.operators import dedup
 
-    idx = spark.read.parquet(path)
-    versions = [
-        r["format_version"]
-        for r in idx.select("format_version").distinct().limit(3).collect()
-    ]
+    idx = spark.read.schema(_MINHASH_SCHEMA).parquet(path)
+    out = idx.select("band", "key", "id", "hs", "bucket_n")
+    band_val = (
+        _first_band(spark, path) if check_bucket_counts else None
+    )
+    # Per key of the spot-checked band, compare the bucket's TOTAL row
+    # count against its (single) recorded bucket_n — the same
+    # total-vs-recorded compare the embedding loader runs. Grouping BY
+    # bucket_n would let concatenated index GENERATIONS pass: each
+    # generation's rows internally consistent with their own bucket_n
+    # while every recorded count lies about the actual bucket
+    # population. Rows of the other bands fall into one null-key group.
+    key = F.when(F.col("band") == band_val, F.col("key"))
+    per_key = idx.groupBy(key.alias("k")).agg(
+        F.collect_set("format_version").alias("versions"),
+        F.collect_set("scheme_fp").alias("fps"),
+        F.bool_or(F.col("scheme_fp").isNull()).alias("no_fp"),
+        F.count(F.lit(1)).cast("long").alias("actual_n"),
+        F.collect_set("bucket_n").alias("recorded"),
+    )
+    stale = F.col("k").isNotNull() & (
+        (F.size("recorded") != 1)
+        | (F.element_at("recorded", 1) != F.col("actual_n"))
+    )
+    check = per_key.agg(
+        F.array_distinct(F.flatten(F.collect_list("versions"))).alias("versions"),
+        F.array_distinct(F.flatten(F.collect_list("fps"))).alias("fps"),
+        F.bool_or("no_fp").alias("no_fp"),
+        F.min_by(
+            F.struct("k", "actual_n", "recorded"), F.when(stale, F.col("k"))
+        ).alias("stale"),
+    ).collect()[0]
+
+    versions = sorted(check["versions"])
     if versions != [INDEX_FORMAT_VERSION]:
         raise ValueError(
             f"minhash index at {path} has format_version {versions}, "
             f"expected [{INDEX_FORMAT_VERSION}]"
         )
-    want_fp = dedup.minhash_scheme_fingerprint()
-    if "scheme_fp" not in idx.columns:
+    if check["no_fp"]:
         raise ValueError(
             f"minhash index at {path} carries no scheme_fp column — it "
             "was written before the scheme-fingerprint guard and its "
@@ -195,10 +250,8 @@ def load_minhash_index(
             "constants; rebuild with operators.dedup.minhash_index and "
             "re-save"
         )
-    fps = [
-        r["scheme_fp"]
-        for r in idx.select("scheme_fp").distinct().limit(3).collect()
-    ]
+    want_fp = dedup.minhash_scheme_fingerprint()
+    fps = sorted(check["fps"])
     if fps != [want_fp]:
         raise ValueError(
             f"minhash index at {path} was built under MinHash scheme "
@@ -208,44 +261,18 @@ def load_minhash_index(
             "/ hash family changed). Rebuild with "
             "operators.dedup.minhash_index and re-save."
         )
-    out = idx.select("band", "key", "id", "hs", "bucket_n")
-    if check_bucket_counts:
-        first = idx.select("band").limit(1).collect()
-        if first:
-            band_val = first[0]["band"]
-            # Per key, compare the bucket's TOTAL row count against its
-            # (single) recorded bucket_n — the same total-vs-recorded
-            # compare the embedding loader runs. Grouping BY bucket_n
-            # would let concatenated index GENERATIONS pass: each
-            # generation's rows internally consistent with their own
-            # bucket_n while every recorded count lies about the actual
-            # bucket population.
-            stale = (
-                out.filter(F.col("band") == band_val)
-                .groupBy("key")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("actual_n"),
-                    F.collect_set("bucket_n").alias("recorded"),
-                )
-                .filter(
-                    (F.size("recorded") != 1)
-                    | (F.element_at("recorded", 1) != F.col("actual_n"))
-                )
-                .limit(1)
-                .collect()
-            )
-            if stale:
-                r = stale[0]
-                raise ValueError(
-                    f"minhash index at {path} is STALE: band {band_val} "
-                    f"key {r['key']} records "
-                    f"bucket_n={sorted(r['recorded'])} but holds "
-                    f"{r['actual_n']} rows — rows were erased or index "
-                    "generations concatenated without refreshing counts; "
-                    "repair with index_store.merge_minhash_index(..., "
-                    "repair=True) or operators.dedup.with_bucket_counts "
-                    "+ re-save"
-                )
+    r = check["stale"]
+    if r is not None:
+        raise ValueError(
+            f"minhash index at {path} is STALE: band {band_val} "
+            f"key {r['k']} records "
+            f"bucket_n={sorted(r['recorded'])} but holds "
+            f"{r['actual_n']} rows — rows were erased or index "
+            "generations concatenated without refreshing counts; "
+            "repair with index_store.merge_minhash_index(..., "
+            "repair=True) or operators.dedup.with_bucket_counts "
+            "+ re-save"
+        )
     return out
 
 

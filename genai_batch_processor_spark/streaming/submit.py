@@ -83,12 +83,3 @@ def run_stream_inference(
         .start()
     )
     q.awaitTermination()
-
-
-def epoch_work_dirs(base: str) -> Callable[[DataFrame, int], str]:
-    """Helper for ``make_pipeline``: fresh work_dir per epoch."""
-
-    def path(_df: DataFrame, epoch_id: int) -> str:
-        return os.path.join(base, f"epoch={epoch_id}")
-
-    return path

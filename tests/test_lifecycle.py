@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -806,6 +807,74 @@ def test_dedupe_run_job_budget_and_input_side_runs_once(
         ops = _plan_operators(rel._jdf.queryExecution().executedPlan())
         assert "InMemoryTableScan" in ops
         assert "Window" not in ops
+    pipe.cleanup()
+
+
+def _corrupting(cls):
+    """A pipeline of wire ``cls`` that corrupts the first line of the
+    provider's first response file before reading the responses."""
+
+    class Corrupting(cls):
+        def _read_responses(self, output_path):
+            for root, _dirs, files in sorted(os.walk(output_path)):
+                for f in sorted(files):
+                    if f.startswith((".", "_")):
+                        continue
+                    path = os.path.join(root, f)
+                    with open(path) as fh:
+                        lines = fh.readlines()
+                    if not lines:
+                        continue
+                    lines[0] = "{not json\n"
+                    with open(path, "w") as fh:
+                        fh.writelines(lines)
+                    # Hadoop rejects a file that no longer matches its sidecar
+                    crc = os.path.join(root, f".{f}.crc")
+                    if os.path.exists(crc):
+                        os.remove(crc)
+                    return super()._read_responses(output_path)
+            raise AssertionError("no response file to corrupt")
+
+    return Corrupting
+
+
+@pytest.mark.parametrize("dedupe", [False, True])
+@pytest.mark.parametrize("wire", ["openai", "vertex"])
+def test_corrupt_response_line_keeps_every_row(
+    spark, sf_dir, tmp_path, wire, dedupe
+):
+    """A planned row whose response line is corrupt has no parsed
+    response to join; it must still come out, once, as an error in the
+    wire's shape keyed by its own custom_id: results ∪ errors hold
+    every input custom_id exactly once."""
+    from genai_batch_processor_spark.plans.pipeline import MISSING_RESPONSE
+    from genai_batch_processor_spark.sources import schemas
+
+    docs = _dup_docs(spark, sf_dir, n=15, copies=2)
+    if wire == "openai":
+        pipe = _corrupting(OpenAIBatchPipeline)(spark, work_dir=str(tmp_path))
+        cid = F.col("resp.custom_id")
+        msg = F.col("resp.error.message")
+    else:
+        pipe = _corrupting(VertexAIBatchPipeline)(
+            spark, work_dir=str(tmp_path)
+        )
+        cid = F.from_json(
+            F.col("resp.request"), schemas.VERTEX_KEYED_REQUEST_LINE
+        )["custom_id"]
+        msg = F.col("resp.response.error.message")
+    results, errors = pipe.run(
+        docs, dedupe_prompts=dedupe, poll_interval_seconds=0.01
+    )
+    got = [
+        r[0]
+        for rel in (results, errors)
+        for r in rel.select(cid).collect()
+    ]
+    want = [r[0] for r in docs.select(ids.custom_id("idx")).collect()]
+    assert sorted(got) == sorted(want)
+    missing = errors.filter(msg == MISSING_RESPONSE).count()
+    assert missing == (2 if dedupe else 1)  # the rep's rows, or the one row
     pipe.cleanup()
 
 

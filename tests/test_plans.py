@@ -727,6 +727,24 @@ def test_part_pairs_cache_invalidation_and_cap(spark, sf_dir):
         queries.invalidate_shared_stages()
 
 
+def test_components_stage_leaves_no_local_checkpoint(spark, sf_dir):
+    """connected_components frees each localCheckpoint as soon as
+    nothing reads it, so building the shared clustering stage adds no
+    entry to the persisted RDDs; the distributed rounds keep only the
+    last round's, which backs their result."""
+    queries.invalidate_shared_stages(sf_dir=sf_dir)
+    comps = _built_as_checkpoint_leaf(
+        spark, lambda: queries._components_shared(spark, sf_dir)
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    rounds = dedup.connected_components(
+        queries._near_dup_pairs_shared(spark, sf_dir), driver_edge_bound=0
+    )
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+    assert sorted(rounds.collect()) == sorted(comps.collect())
+
+
 def test_invalidate_shared_stages_covers_every_cache(spark, sf_dir):
     """r9 self-review: the staleness/eviction hook must cover ALL
     session-shared stages, not just the blocking stages the r8 advice
