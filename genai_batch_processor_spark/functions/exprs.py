@@ -13,6 +13,11 @@ operators/dedup.winnow_from_hashes for the war story).
 MinHash signature alone is ~1,500 of them. A hot path that rebuilds the
 same tree for every micro-batch pays that per epoch; ``once`` builds it
 once per process and JVM.
+
+``array_pairs`` and ``cross_pairs`` build the pairs of a grouped
+near-dup probe from its collected arrays: every pair within one array,
+and every pair across two. The callers pass their own ``pair``
+struct (Jaccard over shingle hashes, cosine over embeddings).
 """
 
 from __future__ import annotations
@@ -36,6 +41,40 @@ def bind(value: Column, body) -> Column:
     transform over a 1-element array — the standard workaround for the
     missing lambda-interior CSE."""
     return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def array_pairs(name: str, pair_fn) -> Column:
+    """``pair_fn(x, y)`` for every element ``x`` of array column
+    ``name`` and every ``y`` after it — all unordered pairs, each once;
+    over a sorted array ``x`` precedes ``y``, which makes ``id_a <
+    id_b`` structural. A column, not an expression: an inline array
+    would be re-evaluated per element (no CSE inside higher-order
+    lambdas)."""
+    arr = F.col(name)
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)), lambda y: pair_fn(x, y)
+            ),
+        )
+    )
+
+
+def cross_pairs(old: str, new: str, pair_fn) -> Column:
+    """``pair_fn(o, n)`` for every struct ``o`` of array column ``old``
+    and every struct ``n`` of ``new`` with a different ``id`` field: a
+    probe group's old-new pairs, where a replayed batch id never pairs
+    with its own old row."""
+    return F.flatten(
+        F.transform(
+            old,
+            lambda o: F.transform(
+                F.filter(new, lambda n: n["id"] != o["id"]),
+                lambda n: pair_fn(o, n),
+            ),
+        )
+    )
 
 
 def once(key: tuple[Hashable, ...], build: Callable[[], T]) -> T:

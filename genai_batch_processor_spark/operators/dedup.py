@@ -27,7 +27,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import hashing, scaling, text as tx
-from genai_batch_processor_spark.functions.exprs import once
+from genai_batch_processor_spark.functions.exprs import (
+    array_pairs,
+    cross_pairs,
+    once,
+)
 from genai_batch_processor_spark.functions.fanout import fan_out
 
 SHINGLE_N = 3
@@ -309,24 +313,6 @@ def band_key_at(sig: Column, band: Column, rows: int = LSH_ROWS) -> Column:
     )
 
 
-def _array_pairs(name: str, pair_fn) -> Column:
-    """``pair_fn(x, y)`` for every element ``x`` of array column
-    ``name`` and every ``y`` after it — all unordered pairs, each once;
-    over a sorted array ``x`` precedes ``y``, which makes ``id_a <
-    id_b`` structural. A column, not an expression: an inline array
-    would be re-evaluated per element (no CSE inside higher-order
-    lambdas)."""
-    arr = F.col(name)
-    return F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + 2, F.size(arr)), lambda y: pair_fn(x, y)
-            ),
-        )
-    )
-
-
 def _pairs_within_buckets(
     buckets: DataFrame, group_cols: list[str], max_bucket: int
 ) -> DataFrame:
@@ -342,7 +328,7 @@ def _pairs_within_buckets(
         .agg(F.sort_array(F.collect_list("__id")).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
-    pairs = _array_pairs(
+    pairs = array_pairs(
         "ids", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     return (
@@ -503,7 +489,7 @@ def _banded_rec_pairs(sigs: DataFrame, pair_fn, max_bucket: int) -> DataFrame:
         .agg(F.sort_array(F.collect_list("__rec")).alias("recs"))
         .filter((F.size("recs") >= 2) & (F.size("recs") <= max_bucket))
     )
-    pairs = _array_pairs("recs", pair_fn)
+    pairs = array_pairs("recs", pair_fn)
     return grouped.select(F.explode(pairs).alias("p"))
 
 
@@ -755,16 +741,6 @@ def _probe_exprs(max_bucket: int):
                 F.round(jaccard(a["hs"], b["hs"]), 6).alias("jaccard"),
             )
 
-        old_new = F.flatten(
-            F.transform(
-                "old",
-                lambda o: F.transform(
-                    # a replayed batch id never pairs with its own old row
-                    F.filter("new", lambda n: n["id"] != o["id"]),
-                    lambda n: pair(o, n),
-                ),
-            )
-        )
         return (
             [
                 F.col("band"),
@@ -791,7 +767,11 @@ def _probe_exprs(max_bucket: int):
                     "new", lambda _: n_new + F.col("min_old") <= max_bucket
                 ).alias("new_ok"),
             ],
-            F.explode(F.concat(old_new, _array_pairs("new_ok", pair))).alias("p"),
+            F.explode(
+                F.concat(
+                    cross_pairs("old", "new", pair), array_pairs("new_ok", pair)
+                )
+            ).alias("p"),
         )
 
     return once(("incremental_near_dup_pairs", max_bucket), build)
@@ -844,7 +824,7 @@ def winnow_pairs(
         .agg(F.sort_array(F.collect_list("__id")).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
-    pairs = _array_pairs(
+    pairs = array_pairs(
         "ids", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     return (
@@ -1330,7 +1310,7 @@ def simhash_near_dup_pairs(
         .agg(F.sort_array(F.collect_list("__rec")).alias("recs"))
         .filter((F.size("recs") >= 2) & (F.size("recs") <= max_bucket))
     )
-    pairs = _array_pairs(
+    pairs = array_pairs(
         "recs",
         lambda x, y: F.struct(
             x["id"].alias("id_a"),

@@ -22,10 +22,11 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import vectors as V
+from genai_batch_processor_spark.functions.exprs import array_pairs, cross_pairs
 from genai_batch_processor_spark.functions.fanout import fan_out
 
 TOPK_DEFAULT = 5
@@ -473,19 +474,19 @@ def embedding_cell_index(
     """The persistable ANN-ingest index of an embedding corpus: one row
     per vector carrying ``(cell, vec_id, embedding, nrm, cell_n)`` —
     the trained-cell assignment WITH the verification payload (vector +
-    precomputed norm) AND its cell's build-time member count, the
-    embedding-space twin of :func:`operators.dedup.minhash_index`. A
-    later batch probes cells and cosine-verifies without ever
-    re-assigning or re-norming the indexed corpus; the probe's cap
-    decision counts index rows per cell (one pruned-column aggregate —
-    see :func:`incremental_embedding_pairs`), with ``cell_n`` kept as
-    at-rest metadata. At rest, partition by ``cell``.
+    precomputed norm) AND its cell's member count, the embedding-space
+    twin of :func:`operators.dedup.minhash_index`. A later batch probes
+    cells and cosine-verifies without ever re-assigning or re-norming
+    the indexed corpus; ``cell_n`` lets the probe ship no payload for a
+    row whose cell alone already fills the cap (see
+    :func:`incremental_embedding_pairs`). At rest, partition by
+    ``cell``.
 
     At 100 TB this is the ANN analog of the incremental MinHash
     contract: per-ingest cost scales with the batch, not the corpus —
     the corpus embeddings are assigned/normed ONCE at index build
-    (shuffle-free: assign_cells_auto), and every probe is one join
-    against the batch's (broadcast-sized) cell set.
+    (shuffle-free: assign_cells_auto), and every probe is one
+    broadcast semi-join of the batch's cells against one index scan.
 
     ``assigner`` (a ``clustering.cell_assigner`` closure) lets a
     repeated caller — the streaming probe drain, which builds one
@@ -493,6 +494,23 @@ def embedding_cell_index(
     expression once per drain instead of re-paying the k × dim
     literal-tree construction every epoch (r13 verdict item 3). Same
     dispatch and results as the default path."""
+    # window count, not groupBy+join-back: one shuffle on cell, single
+    # evaluation of the assignment pipeline (same reasoning as
+    # dedup.with_bucket_counts)
+    return with_cell_counts(
+        _cell_rows(df, centroids, id_col, vec_col, assigner)
+    )
+
+
+def _cell_rows(
+    df: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    id_col: str,
+    vec_col: str,
+    assigner=None,
+) -> DataFrame:
+    """``(cell, vec_id, embedding, nrm)``: ``df`` assigned to its
+    trained cells, with each vector's norm."""
     from genai_batch_processor_spark.operators import clustering
 
     assigned = (
@@ -500,16 +518,12 @@ def embedding_cell_index(
         if assigner is not None
         else clustering.assign_cells_auto(df, centroids, vec_col)
     )
-    base = assigned.select(
+    return assigned.select(
         F.col("cell").cast("int").alias("cell"),
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
         V.norm(F.col(vec_col)).alias("nrm"),
     )
-    # window count, not groupBy+join-back: one shuffle on cell, single
-    # evaluation of the assignment pipeline (same reasoning as
-    # dedup.with_bucket_counts)
-    return with_cell_counts(base)
 
 
 def with_cell_counts(base: DataFrame) -> DataFrame:
@@ -520,11 +534,9 @@ def with_cell_counts(base: DataFrame) -> DataFrame:
 
     Also the REPAIR step after deleting rows from a persisted index
     (takedowns via the cell-partitioned delete): the denormalized
-    ``cell_n`` on surviving rows still counts the removed members —
-    refresh and rewrite after erasures. (Probe-time cap decisions count
-    index ROWS, not ``cell_n``, so a stale count cannot corrupt a
-    probe; the loader still refuses stale indexes so the at-rest
-    metadata stays truthful.)"""
+    ``cell_n`` on surviving rows still counts the removed members,
+    which drops those rows' pairs at probe time once the stale count
+    reaches the cap — refresh and rewrite after erasures."""
     return base.drop("cell_n").withColumn(
         "cell_n",
         F.count(F.lit(1)).over(Window.partitionBy("cell")).cast("long"),
@@ -544,130 +556,89 @@ def incremental_embedding_pairs(
     """Embedding-cosine near-dup pairs INVOLVING AT LEAST ONE NEW
     vector, probing a prebuilt :func:`embedding_cell_index` — old-old
     pairs are never generated (the indexed corpus is presumed already
-    deduplicated) and the corpus embeddings are never re-scanned. The
+    deduplicated) and the corpus embeddings are never re-assigned. The
     cell cap applies to the COMBINED (index + batch) cell population,
     so results match a from-scratch run over the union restricted to
     new-sided pairs — the DuckDB twin replays exactly that.
 
-    Plan shape: the batch is assigned cells shuffle-free with the SAME
-    centroids the index was built with, the cells under the combined
-    cap (≤ k rows) and the batch itself are broadcast into ONE scan of
-    the index (which is never shuffled; the per-cell counts meet in a
-    ≤ k-row full outer join, which Spark cannot broadcast), and the
-    new-new side is a self-join of the (small) batch. Output: (id_a,
-    id_b, cosine) with id_a < id_b.
+    Probe plan — the shape of ``dedup.incremental_near_dup_pairs``:
+    ONE grouping by cell, and THE INDEX NEVER SHUFFLES: the batch
+    (assigned with the SAME centroids the index was built with)
+    broadcasts its cells into a left-semi join over a single scan of
+    the index, so only the index rows that share a batch cell leave
+    the scan. Those rows and the batch rows group on cell; each group
+    emits its old-new and new-new pairs, which are deduped and
+    thresholded once. Output: (id_a, id_b, cosine) with id_a < id_b.
     A replayed id (same id in index AND batch) matches only OTHER
-    vectors — the probe-join self-match is filtered, mirroring
-    dedup.incremental_near_dup_pairs.
+    vectors, as in the MinHash twin.
 
-    Pass ``batch_index`` (a prebuilt, caller-persisted
-    :func:`embedding_cell_index` of the batch) when the caller manages
-    lifecycles — e.g. the streaming ingest loop, which sinks the batch
-    index anyway; else the batch is assigned internally per call and
-    materialized ONCE as a reliable checkpoint (it is referenced by
-    the counts aggregate, the probe broadcast, and both sides of the
-    new-new self-join — same materialize-once contract as
-    dedup.incremental_near_dup_pairs). Bounded: the batch is
-    broadcast-sized by contract (it is broadcast into the index scan
-    regardless), the same bound the ANN query side carries.
+    Cap rule — ONE decision per cell for both pair kinds: a group is
+    kept when its row count (the probe view's rows in that cell plus
+    the batch's) is ≤ ``max_cell``. Counting rows is exact for any
+    probe-view provenance: the streaming drain unions the corpus
+    index with earlier epochs' rows, whose per-source ``cell_n``
+    values cannot be summed, and a row replicated across sources
+    counts once per replica. An old row whose own ``cell_n`` is
+    already ≥ ``max_cell`` still counts but carries no payload: its
+    cell holds at least ``cell_n`` rows plus a batch row, so it fails
+    the cap anyway, and a hot corpus cell ships no embeddings through
+    the shuffle. That bound needs ``cell_n`` to never over-count its
+    source's rows — the loader refuses stale counts, and
+    :func:`with_cell_counts` is the repair after erasures.
 
-    Cap mechanics: per-cell OLD counts come from counting index ROWS
-    per cell — one map-side-combinable aggregate over the index's
-    pruned cell column (output ≤ #cells, broadcast back) — NOT from
-    the stored ``cell_n``. Counting rows is exact for ANY probe-index
-    provenance (the streaming path unions the corpus index with
-    earlier epochs' sunk batch indexes, whose per-source cell_n values
-    cannot be summed without double-counting), and it applies ONE
-    consistent cap decision per cell to both the old-new and new-new
-    paths. ``cell_n`` remains in the index schema as build-time,
-    at-rest metadata."""
-    from genai_batch_processor_spark.operators import clustering
+    The batch's cell rows are read twice (the broadcast cells and the
+    grouped rows), so pass ``batch_index`` (a prebuilt
+    :func:`embedding_cell_index` of the batch, persisted or read back
+    from files) when the caller manages lifecycles — e.g. the
+    streaming drain, which writes the batch rows first and probes the
+    directory it wrote; else the batch is assigned per call and
+    materialized once as an eager checkpoint (bounded: the batch is
+    broadcast-sized by contract, and no session cache entry outlives
+    the call's references)."""
+    b = (
+        batch_index
+        if batch_index is not None
+        else _cell_rows(new_vecs, centroids, id_col, vec_col).checkpoint(
+            eager=True
+        )
+    )
 
-    if batch_index is not None:
-        b = batch_index.select("cell", "vec_id", "embedding", "nrm")
-    else:
-        assigned = clustering.assign_cells_auto(
-            new_vecs, centroids, vec_col
-        ).select(
-            F.col("cell").cast("int").alias("cell"),
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            V.norm(F.col(vec_col)).alias("nrm"),
-        )
-        # materialize once via an eager checkpoint (bounded:
-        # broadcast-sized batch) instead of persist() — no cache entry
-        # outlives the call's references, and unlike collect() +
-        # createDataFrame the materialized relation stays JVM-side (a
-        # Python-local relation costs a Python-worker spin-up on every
-        # downstream action — the r7 stream-marker regression class,
-        # bisected in r8).
-        b = assigned.checkpoint(eager=True)
-    batch_counts = b.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("batch_n")
-    )
-    # ONE consistent combined-cap decision per cell: exact old counts
-    # (row count per cell over the pruned index), batch counts joined
-    # in, cells over the cap dropped for BOTH probe paths
-    old_counts = index.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("old_n")
-    )
-    ok_cells = (
-        old_counts.join(batch_counts, "cell", "full")
-        .withColumn(
-            "__tot",
-            F.coalesce(F.col("old_n"), F.lit(0))
-            + F.coalesce(F.col("batch_n"), F.lit(0)),
-        )
-        .filter(F.col("__tot") <= max_cell)
-        .select("cell")
-    )
-    idx_ok = index.join(F.broadcast(ok_cells), "cell", "left_semi")
-    cosine = lambda xv, yv, xn, yn: F.round(  # noqa: E731
-        F.try_divide(V.dot(xv, yv), xn * yn), 6
-    )
-    old_new = (
-        idx_ok.alias("ix")
-        .join(
-            F.broadcast(b.alias("nb")),
-            F.col("ix.cell") == F.col("nb.cell"),
-        )
-        .filter(F.col("ix.vec_id") != F.col("nb.vec_id"))  # replay self-match
-        .select(
-            F.least(
-                F.col("ix.vec_id"), F.col("nb.vec_id")
-            ).alias("id_a"),
-            F.greatest(
-                F.col("ix.vec_id"), F.col("nb.vec_id")
-            ).alias("id_b"),
-            cosine(
-                F.col("ix.embedding"),
-                F.col("nb.embedding"),
-                F.col("ix.nrm"),
-                F.col("nb.nrm"),
+    def pair(x: Column, y: Column) -> Column:
+        return F.struct(
+            F.least(x["id"], y["id"]).alias("id_a"),
+            F.greatest(x["id"], y["id"]).alias("id_b"),
+            F.round(
+                F.try_divide(V.dot(x["v"], y["v"]), x["nrm"] * y["nrm"]), 6
             ).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+
+    row = F.struct(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"), "nrm"
     )
-    nb = b.join(F.broadcast(ok_cells), "cell", "left_semi")
-    x, y = nb.alias("x"), nb.alias("y")
-    new_new = (
-        x.join(
-            y,
-            (F.col("x.cell") == F.col("y.cell"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
+    old_rows = index.join(
+        F.broadcast(b.select("cell")), "cell", "left_semi"
+    ).select("cell", F.when(F.col("cell_n") < max_cell, row).alias("old"))
+    new_rows = b.select("cell", row.alias("new"))
+    return (
+        old_rows.unionByName(new_rows, allowMissingColumns=True)
+        .groupBy("cell")
+        .agg(
+            F.collect_list("new").alias("new"),
+            F.collect_list("old").alias("old"),  # skips payload-less rows
+            F.count(F.lit(1)).alias("n"),
         )
+        .filter(F.col("n") <= max_cell)
         .select(
-            F.col("x.vec_id").alias("id_a"),
-            F.col("y.vec_id").alias("id_b"),
-            cosine(
-                F.col("x.embedding"),
-                F.col("y.embedding"),
-                F.col("x.nrm"),
-                F.col("y.nrm"),
-            ).alias("cosine"),
+            F.explode(
+                F.concat(
+                    cross_pairs("old", "new", pair), array_pairs("new", pair)
+                )
+            ).alias("p")
         )
-        .filter(F.col("cosine") >= threshold)
+        .select("p.id_a", "p.id_b", "p.cosine")
+        .distinct()
+        # id_a < id_b: a batch id delivered twice never pairs with itself
+        .filter(
+            (F.col("cosine") >= threshold) & (F.col("id_a") < F.col("id_b"))
+        )
     )
-    # distinct mirrors the MinHash twin: a unioned (streaming) probe
-    # index can replay identical index rows across epochs
-    return old_new.unionByName(new_new).distinct()

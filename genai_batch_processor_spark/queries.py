@@ -4106,10 +4106,11 @@ def q_incremental_embedding_near_dup(
 
     Scale: index built once per session (materialized; cell-partitioned
     at rest); per-ingest cost scales with the batch — batch assignment
-    is shuffle-free, batch and its per-cell counts broadcast into ONE
-    index scan. Adaptive k (clustering.adaptive_k) keeps cells ~250
-    vectors at any corpus size; at oracle scales it equals KMEANS_K so
-    the static SQL twin stays valid."""
+    is shuffle-free, the batch's cells broadcast into a left-semi join
+    over ONE index scan, and the matched index rows and the batch meet
+    in one grouping by cell. Adaptive k (clustering.adaptive_k) keeps
+    cells ~250 vectors at any corpus size; at oracle scales it equals
+    KMEANS_K so the static SQL twin stays valid."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _trained_centroids_shared(spark, sf_dir)
     index = _emb_index_shared(spark, sf_dir, cents)

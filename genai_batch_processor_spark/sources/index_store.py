@@ -342,15 +342,16 @@ def load_embedding_index(
        (``similarity.embedding_cell_index``). Without this guard the
        probe would join on incompatible cell ids and return silently
        wrong (mostly-empty) pair sets.
-    2. **Stale ``cell_n``** after a takedown erased rows: spot-checks
-       ONE cell (partition-pruned, two small columns, no embedding
-       payload) — recorded ``cell_n`` vs actual row count — and raises
-       naming ``similarity.with_cell_counts`` as the repair. Every
-       cell gets takedowns independently here (a vector lives in ONE
-       cell, unlike MinHash rows spanning all bands), so the witness
-       is the cell most recently read, not the whole index — cheap
-       tripwire, not a proof; the probe path's row-count cap stays
-       correct either way.
+    2. **Stale ``cell_n``** after a takedown erased rows: one
+       aggregate over two small columns (no embedding payload)
+       compares every cell's recorded ``cell_n`` with its actual row
+       count and raises naming ``similarity.with_cell_counts`` as the
+       repair. Every cell is checked because a vector lives in ONE
+       cell (unlike MinHash rows spanning all bands), so no single
+       cell witnesses an erasure elsewhere — and the probe relies on
+       the counts: an over-counted cell at the cap pairs no batch
+       vector with its index rows
+       (``similarity.incremental_embedding_pairs``).
 
     Version guard mirrors the MinHash loader: distinct BEFORE limit so
     a mixed-version directory cannot hide behind same-version samples."""
@@ -383,35 +384,35 @@ def load_embedding_index(
         )
     out = idx.select("cell", "vec_id", "embedding", "nrm", "cell_n")
     if check_cell_counts:
-        first = idx.select("cell").limit(1).collect()
-        if first:
-            cell_val = first[0]["cell"]
-            # Compare the cell's TOTAL row count against its (single)
-            # recorded cell_n. Grouping BY cell_n would let a
-            # concatenation of index generations pass — each
-            # generation's rows internally consistent with their own
-            # cell_n while every recorded count lies about the actual
-            # cell population.
-            probe = (
-                out.filter(F.col("cell") == cell_val)
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("actual_n"),
-                    F.collect_set("cell_n").alias("recorded"),
-                )
-                .collect()[0]
+        # Compare each cell's TOTAL row count against its (single)
+        # recorded cell_n. Grouping BY cell_n would let a concatenation
+        # of index generations pass — each generation's rows internally
+        # consistent with their own cell_n while every recorded count
+        # lies about the actual cell population.
+        stale = (
+            out.groupBy("cell")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("actual_n"),
+                F.collect_set("cell_n").alias("recorded"),
             )
-            recorded = sorted(probe["recorded"])
-            if recorded != [probe["actual_n"]]:
-                raise ValueError(
-                    f"embedding index at {path} is STALE: cell "
-                    f"{cell_val} records cell_n={recorded} but holds "
-                    f"{probe['actual_n']} rows — rows were erased or "
-                    "index generations concatenated without refreshing "
-                    "counts; repair with "
-                    "index_store.merge_embedding_index(..., "
-                    "repair=True) or operators.similarity."
-                    "with_cell_counts + re-save"
-                )
+            .filter(
+                (F.size("recorded") != 1)
+                | (F.element_at("recorded", 1) != F.col("actual_n"))
+            )
+            .limit(1)
+            .collect()
+        )
+        if stale:
+            r = stale[0]
+            raise ValueError(
+                f"embedding index at {path} is STALE: cell "
+                f"{r['cell']} records cell_n={sorted(r['recorded'])} but "
+                f"holds {r['actual_n']} rows — rows were erased or index "
+                "generations concatenated without refreshing counts; "
+                "repair with index_store.merge_embedding_index(..., "
+                "repair=True) or operators.similarity.with_cell_counts "
+                "+ re-save"
+            )
     return out
 
 

@@ -364,7 +364,9 @@ def embedding_probe_stream_to_parquet(
 
     Cap nuance: each epoch's cap decision counts the rows of its OWN
     probe view (corpus + epochs < N + current batch) — exact per-cell
-    totals regardless of provenance, but an early epoch cannot see
+    totals regardless of provenance (a sunk epoch's rows carry
+    batch-local ``cell_n`` counts, which never over-count, so the
+    probe's payload bound stays exact), but an early epoch cannot see
     later batches, so under cap pressure it may admit pairs the
     one-shot run drops. Exact whenever combined populations stay under
     the cap, which the oracle gate checks on the fixture.

@@ -684,7 +684,8 @@ def test_embedding_index_refuses_mismatched_centroids(spark, sf_dir, tmp_path):
 def test_embedding_index_stale_cell_counts_guard(spark, sf_dir, tmp_path):
     """A takedown that erases rows without refreshing ``cell_n`` must
     be refused at load (the stored count lies about the cell
-    population); with_cell_counts + re-save is the documented repair."""
+    population), also when it touches one cell only, whichever cell
+    that is; with_cell_counts + re-save is the documented repair."""
     import pytest
 
     from genai_batch_processor_spark.sources import index_store
@@ -705,6 +706,22 @@ def test_embedding_index_stale_cell_counts_guard(spark, sf_dir, tmp_path):
     naive.write.mode("overwrite").partitionBy("cell").parquet(stale_path)
     with pytest.raises(ValueError, match="STALE"):
         index_store.load_embedding_index(spark, stale_path, cents)
+    # erase one row of one cell, every other cell untouched
+    full = spark.read.parquet(path)
+    victims = (
+        full.filter("cell_n >= 2")
+        .groupBy("cell")
+        .agg(F.min("vec_id").alias("vec_id"))
+        .collect()
+    )
+    assert len(victims) == 2
+    for v in victims:
+        one_cell = str(tmp_path / f"emb_stale_cell{v.cell}")
+        full.filter(
+            (F.col("cell") != v.cell) | (F.col("vec_id") != v.vec_id)
+        ).write.partitionBy("cell").parquet(one_cell)
+        with pytest.raises(ValueError, match=f"STALE: cell {v.cell} "):
+            index_store.load_embedding_index(spark, one_cell, cents)
     # repair: refresh counts, re-save, loads clean
     repaired = similarity.with_cell_counts(
         index_store.load_embedding_index(
@@ -922,7 +939,10 @@ def test_incremental_embedding_probe_invariants(spark):
     re-ingested vector pairs with its exact twin at cosine 1.0, pairs
     always involve >= 1 new id, old-old pairs never appear, and the
     combined (index + batch) cell cap drops an overfull cell's pairs
-    entirely (matching a from-scratch run under the same cap)."""
+    entirely (matching a from-scratch run under the same cap) — also
+    when the index rows alone fill the cap (they ship no payload), and
+    when the probe view is two sources each under the cap whose rows
+    together are over it."""
     from genai_batch_processor_spark.operators import similarity
 
     # two well-separated directions -> two stable cells
@@ -966,6 +986,50 @@ def test_incremental_embedding_probe_invariants(spark):
         ).collect()
     }
     assert (0, 100) in part and (2, 101) in part
+
+    def probe(view, max_cell, new=batch):
+        return {
+            (r.id_a, r.id_b)
+            for r in similarity.incremental_embedding_pairs(
+                view, new, cents, threshold=0.9, max_cell=max_cell
+            ).collect()
+        }
+
+    # a batch that delivers every vector twice: same pairs, and no
+    # vector pairs with its own second copy
+    assert probe(index, 4, batch.unionByName(batch)) == set(pairs)
+    cell1 = {p for p in pairs if p[1] == 101}
+    assert cell1 == {(2, 101), (3, 101)}
+    # hot cell: cell 0's index rows fill the cap on their own (cell_n =
+    # 3 >= max_cell = 3), so batch vectors 100 and 102 pair with
+    # nothing there, not even each other (the payload-less rows still
+    # count); cell 1 (2 old + 1 new) keeps exactly its uncapped pairs
+    hot = similarity.embedding_cell_index(
+        emb.unionByName(
+            spark.createDataFrame([(4, [0.98, 0.02, 0.0])], emb.schema)
+        ),
+        cents,
+    )
+    assert {r.cell_n for r in hot.filter("cell = 0").collect()} == {3}
+    twins = batch.unionByName(
+        spark.createDataFrame([(102, [1.0, 0.0, 0.0])], batch.schema)
+    )
+    assert probe(hot, 3, twins) == cell1
+    assert (100, 102) in probe(hot, 6, twins)
+    # two-source probe view (corpus index + an earlier epoch's rows,
+    # as the streaming drain probes): 2 rows of cell 0 in each source,
+    # each under max_cell = 4, but 2 + 2 + 1 batch row = 5 rows drop
+    # the cell; with room for 5 it pairs with both sources' rows
+    epoch = similarity.embedding_cell_index(
+        spark.createDataFrame(
+            [(10, [1.0, 0.0, 0.0]), (11, [0.99, 0.0, 0.01])], emb.schema
+        ),
+        cents,
+    )
+    view = index.unionByName(epoch)
+    assert probe(view, 4) == cell1
+    cell0 = {(0, 100), (1, 100), (10, 100), (11, 100)}
+    assert probe(view, 5) == cell1 | cell0
 
 
 def test_incremental_embedding_probe_degenerate_vectors(spark):

@@ -857,8 +857,9 @@ def test_probe_drain_job_ceilings(spark, tmp_path):
     (scheme fingerprint, marker) plus the jobs its stream runs (in the
     job group named by the query's run id). The ceilings are the counts
     the drains run since each epoch writes its batch rows once and
-    reads them back, and the band probe is one (band, key) grouping
-    (they were 28, 43 and 16 before); cutting the per-epoch fixed cost
+    reads them back, and both pair probes are one grouping of the
+    batch rows with the index rows a broadcast semi-join selects (they
+    were 28, 43 and 16 before); cutting the per-epoch fixed cost
     further lowers them."""
     from pyspark.sql.streaming import StreamingQueryListener
 
@@ -920,7 +921,7 @@ def test_probe_drain_job_ceilings(spark, tmp_path):
             lambda s, o, c: ingest.embedding_probe_stream_to_parquet(
                 s, cell, cents, o, c
             ),
-            29,
+            13,
         ),
         (
             "span",
