@@ -4,11 +4,11 @@ two-method contract ``run()`` + ``validate_request()``
 DataFrame stages.
 
 Lifecycle (reference entry point 1, SURVEY.md §3): build requests and
-prompt groups into ONE persisted planned relation → validate (limit(1)
-probe of its cached input columns) → sharded JSONL sink of the
-representatives → submit/poll via the orchestrator boundary → result
-scan → join-back on the representative ordinal → error split. Every
-stage except submit/poll is a distributed DataFrame job; nothing
+prompt groups into ONE planned relation, written once as a parquet leaf
+→ validate (limit(1) probe of the leaf's input columns) → sharded JSONL
+sink of the representatives → submit/poll via the orchestrator boundary
+→ result scan → join-back on the representative ordinal → error split.
+Every stage except submit/poll is a distributed DataFrame job; nothing
 round-trips through driver memory (the reference materializes the whole
 input at ``oai:277`` and the whole output at ``oai:229``).
 """
@@ -20,14 +20,13 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import ids
 from genai_batch_processor_spark.inference import orchestrator
 from genai_batch_processor_spark.operators import batching, joinback, requests
-from genai_batch_processor_spark.sources import bigquery, jsonl, schemas
+from genai_batch_processor_spark.sources import bigquery, jsonl, schemas, tables
 
 # Error message of a planned row no parsed response line answers.
 MISSING_RESPONSE = "no parsable response line for this request"
@@ -61,15 +60,14 @@ class BatchPipeline:
         # write action, no extra count() job; job metadata comes from
         # the orchestrator manifest.
         self.last_metrics: dict = {}
-        # The planned relation the last run() persisted.
-        self._planned: DataFrame | None = None
 
     def cleanup(self) -> list[str]:
-        """Release the relation the last run() persisted, then remove
-        every temp path this pipeline created (vtx:327-354 semantics, as
-        an explicit ledger instead of attribute scraping). Returns the
+        """Remove every temp path this pipeline created (vtx:327-354
+        semantics, as an explicit ledger instead of attribute scraping).
+        Nothing is cached to release: run()'s relations read files under
+        ``work_dir``, so after cleanup() they stay valid only when
+        ``work_dir`` is the caller's. Returns the
         removed paths; idempotent."""
-        self._release()
         removed = []
         for p in self._owned_paths:
             if os.path.exists(p):
@@ -77,11 +75,6 @@ class BatchPipeline:
             removed.append(p)
         self._owned_paths.clear()
         return removed
-
-    def _release(self) -> None:
-        if self._planned is not None:
-            self._planned.unpersist()
-            self._planned = None
 
     # -- reference contract ---------------------------------------------------
 
@@ -189,11 +182,17 @@ class BatchPipeline:
         The input side (``df``'s plan, ``build_requests``, the prompt
         grouping) runs ONCE per call, as one planned relation — input
         columns, ``request``, ``rep_idx`` (the ordinal whose request is
-        submitted for the row) — persisted MEMORY_AND_DISK and read by
-        the emptiness check, validation, the sink and both join-backs.
-        :meth:`cleanup` or the next ``run()`` releases it; the returned
-        relations stay valid after that (lineage recomputes the input
-        side) while ``work_dir``'s response files exist.
+        submitted for the row) — written as parquet to a fresh leaf
+        ``work_dir/planned/<uuid>``. The row count observed on that
+        write is the emptiness check and ``last_metrics["n_input_rows"]``;
+        validation, the sink and both join-backs read the leaf. Nothing
+        is cached: the returned relations read the leaf and
+        ``work_dir/output``, so they stay valid until that directory is
+        removed or a later run() in the same ``work_dir`` rewrites it.
+        Every input column must be one parquet can store: a
+        ``CalendarIntervalType`` column (``make_interval``) raises
+        ``AnalysisException`` at the planned write, before any request
+        is written or submitted.
 
         Empty-input short-circuit (#15, oai:277-280) returns EMPTY
         relations with the same schemas as a non-empty run — downstream
@@ -213,7 +212,6 @@ class BatchPipeline:
         the prompt once.
         """
         self.last_metrics = {}
-        self._release()
         if dedupe_prompts and input_path is not None:
             raise ValueError(
                 "dedupe_prompts needs the build stage; it cannot apply "
@@ -240,27 +238,22 @@ class BatchPipeline:
                 ids.extract_index(F.col("custom_id")).alias("rep_idx"),
             )
             planned = df.join(req, df["idx"] == req["rep_idx"], "inner")
-        # Spark keys its cache by plan: drop what an earlier, uncleaned run
-        # of this same plan left, so this run reads its input afresh.
-        planned.unpersist()
-        planned = self._planned = planned.persist(StorageLevel.MEMORY_AND_DISK)
-        if planned.isEmpty():
+        planned, n_input = tables.write_leaf(
+            planned, os.path.join(self.work_dir, "planned", uuid.uuid4().hex)
+        )
+        self.last_metrics["n_input_rows"] = n_input
+        if not n_input:
             empty = self._empty_responses()
             return self._assemble(planned, empty, dedupe_prompts)
 
         if input_path is None:
-            cached = planned.select(*df.columns)
-            if validate and not self.validate_request(cached, **build_kwargs):
+            inputs = planned.select(*df.columns)
+            if validate and not self.validate_request(inputs, **build_kwargs):
                 raise ValueError("validate_request failed on sample item")
-            # Input rows are counted BEFORE the representative filter,
-            # in the same write action as the submit counts.
-            n_obs = Observation(f"input-{uuid.uuid4().hex[:6]}")
             obs = Observation(f"submit-{uuid.uuid4().hex[:6]}")
-            to_write = planned.observe(
-                n_obs, F.count(F.lit(1)).alias("n_input_rows")
-            ).filter(F.col("idx") == F.col("rep_idx")).select(
-                "request.*"
-            ).observe(
+            to_write = planned.filter(
+                F.col("idx") == F.col("rep_idx")
+            ).select("request.*").observe(
                 obs,
                 F.count(F.lit(1)).alias("n_submitted"),
                 F.sum(F.octet_length(F.to_json(F.struct("*"))))
@@ -269,8 +262,7 @@ class BatchPipeline:
             )
             input_path = os.path.join(self.work_dir, "input")
             jsonl.write_jsonl(to_write, input_path)
-            n_input = n_obs.get["n_input_rows"] if dedupe_prompts else None
-            self.last_metrics = dict(obs.get, n_input_rows=n_input)
+            self.last_metrics.update(obs.get)
 
         output_path = os.path.join(self.work_dir, "output")
         job = orchestrator.run_job(

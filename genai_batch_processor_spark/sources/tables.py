@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 TABLE_NAMES = (
@@ -60,3 +60,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+
+
+def write_leaf(df: DataFrame, path: str) -> tuple[DataFrame, int]:
+    """Write ``df`` once as parquet at ``path`` (overwriting) and read
+    it back under ``df``'s own schema, no inference: ``df``'s plan runs
+    in this one write, every later action scans the files, and nothing
+    is cached or needs releasing. Also returns the row count, observed
+    during the write.
+
+    The count is observed on top of the written rows, not inside
+    ``df``: AQE replaces an empty shuffle stage by an empty relation,
+    and an observation inside that stage then reports no metrics at
+    all."""
+    seen = Observation()
+    df.observe(seen, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path), seen.get["n"]

@@ -22,12 +22,12 @@ from __future__ import annotations
 import contextlib
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from genai_batch_processor_spark.functions import ids
 from genai_batch_processor_spark.operators import dedup, responses
-from genai_batch_processor_spark.sources import compaction
+from genai_batch_processor_spark.sources import compaction, tables
 
 
 class _EpochLedger:
@@ -181,14 +181,14 @@ def _drain_epoch_sink(
     scheme ``marker`` and the epoch ledger live there) and the report
     root under ``out_dir``. Every micro-batch first overwrites ``{rows
     root}/batch={epoch}`` with ``batch_rows(batch_df)``, then reads
-    that directory back — a plain parquet leaf under the rows' own
-    schema, so nothing is persisted or released — as the ``rows`` of
-    ``report(probe, batch_df, rows)``, which overwrites ``{report
-    root}/batch={epoch}``. The row count observed on the rows write
-    says whether the epoch is empty (each ``batch_rows`` emits at least
-    one row per batch record); an empty epoch leaves its committed,
-    empty rows directory and no report. The probe
-    is ``index``, unioned — when ``extend`` — with the rows root's sunk
+    that directory back (``tables.write_leaf``) — a plain parquet leaf
+    under the rows' own schema, so nothing is persisted or released —
+    as the ``rows`` of ``report(probe, batch_df, rows)``, which
+    overwrites ``{report root}/batch={epoch}``. The row count observed
+    on the rows write says whether the epoch is empty (each
+    ``batch_rows`` emits at least one row per batch record); an empty
+    epoch leaves its committed, empty rows directory and no report. The
+    probe is ``index``, unioned — when ``extend`` — with the rows root's sunk
     epochs strictly before this one (read under the same schema, no
     inference), so cross-micro-batch pairs are found exactly once, when
     the later side arrives.
@@ -223,19 +223,13 @@ def _drain_epoch_sink(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         earlier = ledger.earlier(epoch_id) if ledger else []
         rows_dir = compaction.epoch_dir(rows_root, epoch_id)
-        # observed on top of the rows, not on batch_df: AQE replaces an
-        # empty shuffle stage by an empty relation, and an observation
-        # inside that stage then reports no metrics at all
-        seen = Observation()
-        rows = batch_rows(batch_df).observe(seen, F.count(F.lit(1)).alias("n"))
-        rows.write.mode("overwrite").parquet(rows_dir)
-        if seen.get["n"]:
+        written, n = tables.write_leaf(batch_rows(batch_df), rows_dir)
+        if n:
             probe = index
             if earlier:
                 probe = probe.unionByName(
-                    spark.read.schema(rows.schema).parquet(*earlier)
+                    spark.read.schema(written.schema).parquet(*earlier)
                 )
-            written = spark.read.schema(rows.schema).parquet(rows_dir)
             report(probe, batch_df, written).write.mode("overwrite").parquet(
                 compaction.epoch_dir(report_root, epoch_id)
             )

@@ -14,9 +14,11 @@ Design points:
   chop the corpus into micro-batches, every document submits under the
   same custom_id it would get in a single batch run (assertable: the
   streamed result set equals the one-shot result set exactly).
-- **Per-epoch release.** Once an epoch's results and errors are
-  written, ``pipe.cleanup()`` unpersists the relation its ``run()``
-  cached, so cached blocks do not accumulate over a long drain.
+- **Per-epoch release.** An epoch's ``run()`` caches nothing: its
+  planned relation is a parquet leaf under the epoch's work_dir. Once
+  the epoch's results and errors are written, ``pipe.cleanup()``
+  removes the temp paths the pipeline created, so nothing accumulates
+  over a long drain but the work_dirs the caller chose.
 - **Fresh work_dir per micro-batch.** Spark caches file listings per
   path in a session; re-reading an overwritten ``output`` dir can serve
   stale listings. Each epoch gets ``{base}/epoch={id}`` for its JSONL

@@ -758,32 +758,64 @@ def test_pipeline_run_exposes_submit_metrics(spark, sf_dir, tmp_path):
     pipe2 = OpenAIBatchPipeline(spark, work_dir=str(tmp_path / "p2"))
     pipe2.run(docs, poll_interval_seconds=0.01)
     assert pipe2.last_metrics["n_submitted"] == 60
-    assert pipe2.last_metrics["n_input_rows"] is None
+    assert pipe2.last_metrics["n_input_rows"] == 60
+
+    # passthrough of pipe2's shards, and empty input: rows still counted
+    pipe3 = OpenAIBatchPipeline(spark, work_dir=str(tmp_path / "p3"))
+    pipe3.run(
+        docs, input_path=str(tmp_path / "p2" / "input"),
+        poll_interval_seconds=0.01,
+    )
+    assert pipe3.last_metrics["n_input_rows"] == 60
+    assert "n_submitted" not in pipe3.last_metrics
+    pipe4 = OpenAIBatchPipeline(spark, work_dir=str(tmp_path / "p4"))
+    pipe4.run(docs.limit(0), poll_interval_seconds=0.01)
+    assert pipe4.last_metrics == {"n_input_rows": 0}
 
 
-def _plan_operators(plan) -> list[str]:
-    """Operator names of a physical plan, looking through the adaptive
-    and query-stage wrappers but not into a cached relation's own plan
-    (an InMemoryTableScan is a leaf here)."""
+def _plan_nodes(plan) -> list:
+    """Nodes of a physical plan, in place of the adaptive and
+    query-stage wrappers the nodes they wrap."""
     name = plan.nodeName()
     if name == "AdaptiveSparkPlan":
-        return [name] + _plan_operators(plan.executedPlan())
+        return _plan_nodes(plan.executedPlan())
     if name.endswith("QueryStage"):
-        return [name] + _plan_operators(plan.plan())
+        return _plan_nodes(plan.plan())
     kids = plan.children()
-    return [name] + [
-        op for i in range(kids.size()) for op in _plan_operators(kids.apply(i))
+    return [plan] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
     ]
+
+
+def _scans(rel) -> set[tuple[str, str]]:
+    """(file format, root path) of every leaf of ``rel``'s physical
+    plan; a leaf that is not a file scan fails the test."""
+    out = set()
+    for node in _plan_nodes(rel._jdf.queryExecution().executedPlan()):
+        if node.children().size():
+            continue
+        assert node.getClass().getSimpleName() == "FileSourceScanExec", (
+            node.nodeName()
+        )
+        fs = node.relation()
+        roots = fs.location().rootPaths()
+        for i in range(roots.size()):
+            path = roots.apply(i).toString().removeprefix("file:")
+            out.add((fs.fileFormat().toString(), path))
+    return out
 
 
 def test_dedupe_run_job_budget_and_input_side_runs_once(
     spark, sf_dir, tmp_path
 ):
-    """One Vertex run(dedupe_prompts=True), the results write and the
-    error count stay under a Spark job ceiling: the input side (the
-    assign_ids window, build_requests, the prompt grouping) is planned
-    once, persisted, and never re-run by the join-backs. A lazy plan
-    ran 24 jobs here (10 + 8 + 6); the persisted plan runs 14."""
+    """The input side (the assign_ids window, build_requests, the
+    prompt grouping) runs once, in the planned leaf's write: both
+    join-backs read only that leaf and the response files, with no
+    Window and no cached relation. One Vertex run(dedupe_prompts=True)
+    takes 9 Spark jobs (10 with the persisted plan it replaced), and
+    with the results write and the error count 14. A lazy plan ran 24
+    (10 + 8 + 6). Totals are bounded, not per-action splits: the
+    leaf's several files add one AQE job to the global count."""
     docs = _dup_docs(spark, sf_dir, n=25, copies=2)
     sc = spark.sparkContext
     group = "lifecycle-job-budget"
@@ -801,12 +833,20 @@ def test_dedupe_run_job_budget_and_input_side_runs_once(
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert n_errors > 0
-    assert n_all - n_run <= 4   # the join-backs: 8 + 6 with a lazy plan
-    assert n_all <= 16
+    assert n_run <= 9
+    assert n_all <= 14
+    (leaf,) = os.listdir(tmp_path / "planned")
+    want = {
+        ("Parquet", str(tmp_path / "planned" / leaf)),
+        ("Text", str(tmp_path / "output")),
+    }
     for rel in (results, errors):
-        ops = _plan_operators(rel._jdf.queryExecution().executedPlan())
-        assert "InMemoryTableScan" in ops
-        assert "Window" not in ops
+        names = [
+            n.nodeName()
+            for n in _plan_nodes(rel._jdf.queryExecution().executedPlan())
+        ]
+        assert "Window" not in names and "InMemoryTableScan" not in names
+        assert _scans(rel) == want
     pipe.cleanup()
 
 
@@ -878,46 +918,79 @@ def test_corrupt_response_line_keeps_every_row(
     pipe.cleanup()
 
 
-def test_cleanup_releases_the_persisted_plan(spark, sf_dir, tmp_path):
-    """run() persists one planned relation. A second run() on the same
-    pipeline releases the first run's; a run of the same plan on
-    another pipeline builds its own instead of reading what an
-    uncleaned run left cached; cleanup() releases the last one, also
-    when work_dir is the caller's. The returned relations stay valid
-    after the release: a persisted relation recomputes from its
-    lineage (the block-drop property a localCheckpoint lacks)."""
+def test_run_caches_nothing_and_reads_its_own_leaf(spark, sf_dir, tmp_path):
+    """run() writes its planned relation to a fresh leaf under its
+    work_dir and caches nothing. Two pipelines running the same plan
+    each read their own leaf, so their rows never mix, and an earlier
+    run's relations keep their rows after a later run in another
+    work_dir. The returned
+    relations stay row-identical after cleanup() of a caller-owned
+    work_dir, which removes nothing."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
-
-    def new_rdds():
-        return set(jsc.getPersistentRDDs().keySet()) - before
 
     def rows(df):
         j = F.to_json(F.struct(*df.columns))
         return sorted(r[0] for r in df.select(j).collect())
 
-    kw = dict(dedupe_prompts=True, poll_interval_seconds=0.01)
-    pipe = VertexAIBatchPipeline(spark, work_dir=str(tmp_path / "a"))
-    pipe.run(_dup_docs(spark, sf_dir, n=15, copies=2), **kw)
-    first = new_rdds()
-    assert len(first) == 1
-    docs = _dup_docs(spark, sf_dir, n=10, copies=2)
-    pipe.work_dir = str(tmp_path / "b")
-    pipe.run(docs, **kw)
-    second = new_rdds()
-    assert len(second) == 1 and second != first
-    other = VertexAIBatchPipeline(spark, work_dir=str(tmp_path / "c"))
-    results, errors = other.run(docs, **kw)
-    third = new_rdds()
-    assert len(third) == 1 and third != second
+    def roots(df):
+        return {p for _fmt, p in _scans(df)}
 
-    res_rows, err_rows = rows(results), rows(errors)
-    assert len(res_rows) + len(err_rows) == 20
+    kw = dict(dedupe_prompts=True, poll_interval_seconds=0.01)
+    first = VertexAIBatchPipeline(spark, work_dir=str(tmp_path / "a"))
+    res_a, err_a = first.run(_dup_docs(spark, sf_dir, n=15, copies=2), **kw)
+    rows_a = rows(res_a), rows(err_a)
+    assert len(rows_a[0]) + len(rows_a[1]) == 30
+
+    docs = _dup_docs(spark, sf_dir, n=10, copies=2)
+    first.work_dir = str(tmp_path / "b")
+    res_b, err_b = first.run(docs, **kw)
+    other = VertexAIBatchPipeline(spark, work_dir=str(tmp_path / "c"))
+    res_c, err_c = other.run(docs, **kw)
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+
+    for wd, rels in (("a", (res_a, err_a)), ("b", (res_b, err_b)),
+                     ("c", (res_c, err_c))):
+        (leaf,) = os.listdir(tmp_path / wd / "planned")
+        for rel in rels:
+            assert str(tmp_path / wd / "planned" / leaf) in roots(rel)
+            assert all(p.startswith(str(tmp_path / wd)) for p in roots(rel))
+    assert (rows(res_a), rows(err_a)) == rows_a
+    rows_c = rows(res_c), rows(err_c)
+    assert len(rows_c[0]) + len(rows_c[1]) == 20
+    assert (rows(res_b), rows(err_b)) == rows_c
+
     assert other.cleanup() == []  # caller-owned work_dir: nothing removed
-    assert not new_rdds()
-    assert rows(results) == res_rows
-    assert rows(errors) == err_rows
-    pipe.cleanup()
+    assert (rows(res_c), rows(err_c)) == rows_c
+    first.cleanup()
+
+
+def test_unstorable_input_column_fails_before_billing(spark, sf_dir, tmp_path):
+    """An input column parquet cannot store (a CalendarIntervalType
+    from make_interval) fails run() at the planned write: no request
+    file is written and the backend's submit is never called."""
+    from pyspark.errors import AnalysisException
+
+    from genai_batch_processor_spark.inference import orchestrator
+
+    class Spy(orchestrator.LocalMockBackend):
+        submits = 0
+
+        def submit(self, *args, **kwargs):
+            Spy.submits += 1
+            return super().submit(*args, **kwargs)
+
+    docs = load_table(spark, sf_dir, "documents").limit(5)
+    docs = ids.assign_ids(docs, "doc_id").withColumn(
+        "gap", F.expr("make_interval(0, 0, 0, 1)")
+    )
+    pipe = OpenAIBatchPipeline(
+        spark, backend=Spy(spark), work_dir=str(tmp_path)
+    )
+    with pytest.raises(AnalysisException):
+        pipe.run(docs, poll_interval_seconds=0.01)
+    assert not os.path.exists(tmp_path / "input")
+    assert Spy.submits == 0
 
 
 def test_takedown_reaches_persisted_dedup_index(spark, sf_dir, tmp_path):
